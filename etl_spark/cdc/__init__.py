@@ -13,8 +13,17 @@ from etl_spark.cdc.patch import (
     folded_to_patch_rows,
     resolve_patches,
 )
-from etl_spark.cdc.router import RoutedCdcStream, route_batch
 from etl_spark.cdc.scd2 import apply_scd2, create_scd2_table, scd2_schema
+
+
+def __getattr__(name: str):
+    # router builds on the streaming driver, which imports this package:
+    # load it on first use so either package can be imported first
+    if name in ("RoutedCdcStream", "route_batch"):
+        from etl_spark.cdc import router
+
+        return getattr(router, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 __all__ = [
     "CHANGELOG_SCHEMA",

@@ -68,6 +68,7 @@ from etl_spark.cdc.apply import dedup_last_writer_wins
 from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.cdc.state import CommitLog, WatermarkStore, filter_by_watermarks
 from etl_spark.lake import LakeTable
+from etl_spark.streaming.stream import WalTail, retry_with_backoff
 
 
 def _route_infos(
@@ -364,12 +365,17 @@ def route_batch(
 
 
 @dataclass
-class RoutedCdcStream:
+class RoutedCdcStream(WalTail):
     """Structured Streaming tail of a heterogeneous WAL ->
     foreachBatch(route_batch): the multi-destination sibling of
     ``CdcStream``, with the catalog commit as each micro-batch's atomic
-    visibility point. availableNow trigger; resume = streaming
-    checkpoint + commit log + watermarks, exactly as CdcStream."""
+    visibility point. The tail itself — state directory, schema
+    discovery, trigger sizing, the availableNow query, ``start()`` /
+    ``run_to_completion()`` and the applied-batch cadence — is the shared
+    :class:`~etl_spark.streaming.stream.WalTail` driver; this class adds
+    ``route_batch`` as the per-batch apply, the watermark store and
+    dead-letter directory it needs, view refresh and the per-destination
+    maintenance tick."""
 
     spark: SparkSession
     wal_dir: str
@@ -382,7 +388,7 @@ class RoutedCdcStream:
     evolve: dict[str, Sequence[str]] | None = None
     op_col: str = "op"
     max_files_per_trigger: int = 8
-    # backlog-aware trigger coalescing, same contract as CdcStream:
+    # row-sized trigger coalescing, same contract as CdcStream:
     # per-destination LWW dedup resolves intra-batch order, so grouping
     # more segments per trigger is order-safe; rows-per-batch bound from
     # sampled footer estimates with max_files_per_trigger as the floor
@@ -421,24 +427,17 @@ class RoutedCdcStream:
     query: object = field(default=None, init=False)
 
     def __post_init__(self) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
-        self._applied = 0
-        self.commit_log = CommitLog(os.path.join(self.state_dir, "commits"))
+        super().__post_init__()
         self.watermarks = WatermarkStore(
             os.path.join(self.state_dir, "watermarks")
         )
-        self.metrics = MetricsTable(os.path.join(self.state_dir, "metrics"))
-        self.checkpoint_dir = os.path.join(self.state_dir, "checkpoint")
         self.dead_letter_dir = (
             os.path.join(self.state_dir, "dead_letter")
             if self.dead_letter
             else None
         )
-        self.batch_stats: list[dict] = []
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        from etl_spark.streaming.stream import retry_with_backoff
-
         stats = retry_with_backoff(
             lambda: route_batch(
                 self.spark,
@@ -465,20 +464,10 @@ class RoutedCdcStream:
             ),
             attempts=self.retry_attempts,
         )
-        self.batch_stats.append(stats)
-        if not stats.get("skipped"):
-            self._applied += 1
-            if (
-                self.views
-                and self.refresh_views_every
-                and self._applied % self.refresh_views_every == 0
-            ):
-                stats["view_refreshes"] = [
-                    retry_with_backoff(v.refresh, attempts=self.retry_attempts)
-                    for v in self.views
-                ]
-            if self.compact_every and self._applied % self.compact_every == 0:
-                stats["maintenance"] = self._maintenance_tick()
+        self._record(stats)
+        self._refresh_views(stats)
+        if self._due(stats, self.compact_every):
+            stats["maintenance"] = self._maintenance_tick()
 
     def _maintenance_tick(self) -> dict:
         """Compact + expire every routed destination, adopting each
@@ -498,32 +487,3 @@ class RoutedCdcStream:
                 t.expire_snapshots(keep_last=self.expire_keep_last)
             out[name] = self.catalog.publish(name)
         return out
-
-    def run_to_completion(self) -> list[dict]:
-        from etl_spark.streaming.stream import (
-            adaptive_files_per_trigger,
-            discover_wal_schema,
-        )
-
-        schema = discover_wal_schema(self.spark, self.wal_dir)
-        per_trigger = self.max_files_per_trigger
-        if self.adaptive_trigger_rows is not None:
-            per_trigger = adaptive_files_per_trigger(
-                self.wal_dir,
-                int(self.adaptive_trigger_rows),
-                floor=self.max_files_per_trigger,
-            )
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("basePath", self.wal_dir)
-            .option("maxFilesPerTrigger", per_trigger)
-            .parquet(self.wal_dir)
-        )
-        self.query = (
-            stream.writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        self.query.awaitTermination()
-        return self.batch_stats

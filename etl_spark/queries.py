@@ -3451,10 +3451,11 @@ def q_streaming_cdc_replay_oracle(spark: SparkSession, sf_dir: str) -> DataFrame
         key=["conv_id", "turn_idx"],
         n_buckets=8,
     )
-    # max_files_per_trigger=4 forces multi-batch replay (exactly-once
-    # machinery under test); adaptive_trigger_rows rides along with a
-    # row target sized to ~2 segments so the r5 backlog-coalescing path
-    # is ALSO driver-attested — the converged state is trigger-sizing
+    # adaptive_trigger_rows sizes each trigger at ~2 segments' rows (the
+    # row target over a sampled-footer rows-per-segment estimate), with
+    # max_files_per_trigger=1 as the floor: a multi-batch replay (the
+    # exactly-once machinery under test) that ALSO driver-attests the
+    # row-sized trigger — the converged state is trigger-sizing
     # independent by construction
     run_stream(spark, wal, table, os.path.join(tmp, "state"),
                max_files_per_trigger=1,

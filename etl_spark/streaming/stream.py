@@ -1,4 +1,4 @@
-"""Structured Streaming CDC tail: WAL directory -> foreachBatch(apply_batch).
+"""Structured Streaming CDC tail: WAL directory -> foreachBatch(_apply).
 
 The Spark-native re-expression of the reference's v2 pipeline
 (`Run`, /root/reference/v2/etl.go:66-234): its source goroutines + bounded
@@ -11,6 +11,22 @@ retry-with-backoff (/root/reference/v2/etl.go:15-28) becomes Spark task
 retries + idempotent MERGE; checkpoint-resume
 (/root/reference/v2/etl.go:67-74) becomes the streaming checkpointLocation
 plus our commit-log/watermark state.
+
+That query is built in exactly one place, :class:`WalTail` — the driver
+that opens the state directory (commit log, metrics, checkpoint,
+``batch_stats``), discovers the WAL schema, sizes the trigger, runs the
+``availableNow`` query over ``_apply`` and keeps the applied-batch count
+the every-N cadences read. Each stream contributes only its ``_apply``
+and its own maintenance:
+
+* :class:`CdcStream` — ``apply_batch`` (LWW MERGE to the latest state),
+  plus fan-out, near-dup index, views, export, compaction/retention and
+  catalog publication;
+* :class:`Scd2Stream` — ``apply_scd2`` (one SCD2 version row per state),
+  with its payload taken from the discovered WAL schema;
+* :class:`~etl_spark.cdc.router.RoutedCdcStream` — ``route_batch`` (one
+  heterogeneous WAL to N catalog tables, one catalog commit per batch),
+  plus views and per-destination maintenance.
 
 Schema evolution mid-stream: a Structured Streaming source has a fixed
 schema for the lifetime of a query. The engine therefore discovers the
@@ -85,18 +101,17 @@ def adaptive_files_per_trigger(
     wal_dir: str,
     target_rows: int,
     floor: int,
-    already_processed: int = 0,
     sample_cap: int = 64,
 ) -> int:
-    """Backlog-aware trigger sizing: estimate rows/segment from a sample
-    of parquet FOOTERS (driver metadata reads, no data I/O) and return
-    the files-per-trigger that puts ~``target_rows`` in each micro-batch
-    — never below ``floor`` (the static configuration acts as a minimum
+    """Row-sized trigger: estimate rows/segment from a sample of parquet
+    FOOTERS (driver metadata reads, no data I/O) and return the
+    files-per-trigger that puts ~``target_rows`` in each micro-batch —
+    never below ``floor`` (the static configuration acts as a minimum
     so adaptive mode can only coalesce, never slow down). A WAL of many
     tiny segments then replays in a few driver actions instead of one
     per ``floor`` files, which is the measured per-batch driver-floor
     tax at sandbox scale (BENCH.md, skew replay). Sampling is capped so
-    a 10^5-segment backlog costs 64 footer reads, not 10^5."""
+    a 10^5-segment WAL costs 64 footer reads, not 10^5."""
     import pyarrow.parquet as papq
 
     segs: list[str] = []
@@ -104,9 +119,6 @@ def adaptive_files_per_trigger(
         segs.extend(
             os.path.join(root, n) for n in names if n.endswith(".parquet")
         )
-    n_pending = max(0, len(segs) - already_processed)
-    if n_pending == 0:
-        return floor
     # spread the sample across the listing so one partition's segment
     # size doesn't dominate the estimate
     segs.sort()
@@ -119,12 +131,91 @@ def adaptive_files_per_trigger(
         except Exception:  # unreadable footer: fall back to the floor
             return floor
     avg = max(1.0, rows / max(1, len(sampled)))
-    per_trigger = max(int(floor), int(target_rows // avg) or 1)
-    return min(per_trigger, n_pending) if n_pending > floor else floor
+    return max(int(floor), int(target_rows // avg) or 1)
+
+
+class WalTail:
+    """The one WAL-tail driver behind ``CdcStream``, ``Scd2Stream`` and
+    ``RoutedCdcStream``: the only code that turns their WAL directory
+    into a micro-batch stream.
+
+    A mixin over the streams' dataclasses (it declares no fields, so their
+    positional field order is untouched). It reads ``spark``, ``wal_dir``,
+    ``state_dir``, ``max_files_per_trigger`` and ``adaptive_trigger_rows``
+    and calls the stream's ``_apply(batch_df, batch_id)`` per micro-batch.
+    An ``_apply`` records its stats with ``_record`` and asks ``_due`` for
+    its every-N-applied-batches cadences."""
+
+    def __post_init__(self) -> None:
+        os.makedirs(self.state_dir, exist_ok=True)
+        self.commit_log = CommitLog(os.path.join(self.state_dir, "commits"))
+        self.metrics = MetricsTable(os.path.join(self.state_dir, "metrics"))
+        self.checkpoint_dir = os.path.join(self.state_dir, "checkpoint")
+        self.batch_stats: list[dict] = []
+        self._applied = 0
+
+    def _on_wal_schema(self, schema: T.StructType) -> None:
+        """Called with the WAL schema discovered at each (re)start."""
+
+    def start(self):
+        schema = discover_wal_schema(self.spark, self.wal_dir)
+        self._on_wal_schema(schema)
+        per_trigger = self.max_files_per_trigger
+        if self.adaptive_trigger_rows is not None:
+            per_trigger = adaptive_files_per_trigger(
+                self.wal_dir,
+                int(self.adaptive_trigger_rows),
+                floor=self.max_files_per_trigger,
+            )
+        self.query = (
+            self.spark.readStream.schema(schema)
+            .option("basePath", self.wal_dir)
+            .option("maxFilesPerTrigger", per_trigger)
+            .parquet(self.wal_dir)
+            .writeStream.foreachBatch(self._apply)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        return self.query
+
+    def run_to_completion(self) -> list[dict]:
+        """Process every currently-available WAL segment, then stop
+        (availableNow trigger). Re-invoking after new segments arrive — or
+        after a crash — resumes from the streaming checkpoint, with the
+        commit log (+ watermarks) making any replayed batch a no-op."""
+        self.start().awaitTermination()
+        return self.batch_stats
+
+    def _record(self, stats: dict) -> None:
+        """Append one batch's stats; a batch that was not a commit-log
+        skip counts toward the applied-batch cadences."""
+        self.batch_stats.append(stats)
+        if not stats.get("skipped"):
+            self._applied += 1
+
+    def _due(self, stats: dict, every: int) -> bool:
+        """The every-N-applied-batches check for the batch just recorded
+        (``every`` = 0 disables)."""
+        return (
+            bool(every)
+            and not stats.get("skipped")
+            and self._applied % every == 0
+        )
+
+    def _refresh_views(self, stats: dict) -> None:
+        """Refresh the stream's ``views`` on their cadence. Each refresh is
+        exactly-once on its own watermark, so a crashed cadence just
+        catches up at the next one."""
+        if self.views and self._due(stats, self.refresh_views_every):
+            stats["view_refreshes"] = [
+                retry_with_backoff(v.refresh, attempts=self.retry_attempts)
+                for v in self.views
+            ]
 
 
 @dataclass
-class CdcStream:
+class CdcStream(WalTail):
     spark: SparkSession
     wal_dir: str
     table: LakeTable
@@ -135,17 +226,18 @@ class CdcStream:
     # ~churn x less transform work per batch (see apply_batch)
     transform_stage: str = "pre"
     max_files_per_trigger: int = 8
-    # Adaptive micro-batch coalescing (VERDICT r4 #3): when set, the
-    # files-per-trigger is derived from the PENDING BACKLOG at start()
-    # so each micro-batch carries ~this many rows — a backlog of many
-    # tiny WAL segments replays in a few driver actions instead of one
+    # Adaptive micro-batch coalescing (VERDICT r4 #3): when set, each
+    # start() sizes the trigger at ~this many rows per micro-batch:
+    # files-per-trigger = this target / a rows-per-segment estimate from
+    # sampled parquet footers (driver-side metadata only, at most 64
+    # files), with `max_files_per_trigger` as the floor. A WAL of many
+    # tiny segments then replays in a few driver actions instead of one
     # per `max_files_per_trigger` files (the per-batch driver floor is
-    # the measured residual of the skew replay, BENCH.md). Row counts
-    # come from parquet footers (driver-side metadata only, sampled at
-    # 64 files); coalescing MORE same-partition segments into one batch
-    # is always order-safe — the per-batch LWW dedup resolves intra-
-    # batch order by (ts, lsn), the mtime/watermark contract only
-    # governs CROSS-batch delivery. None = static max_files_per_trigger.
+    # the measured residual of the skew replay, BENCH.md). Coalescing
+    # MORE same-partition segments into one batch is always order-safe —
+    # the per-batch LWW dedup resolves intra-batch order by (ts, lsn),
+    # the mtime/watermark contract only governs CROSS-batch delivery.
+    # None = static max_files_per_trigger.
     adaptive_trigger_rows: int | None = None
     salted_dedup: bool = False
     dead_letter: bool = True
@@ -302,8 +394,7 @@ class CdcStream:
             # with verification silently off and the error only raised
             # mid-stream once the index existed (ADVICE r4).
             raise ValueError("dedup_verify requires dedup_threshold")
-        os.makedirs(self.state_dir, exist_ok=True)
-        self.commit_log = CommitLog(os.path.join(self.state_dir, "commits"))
+        super().__post_init__()
         self.watermarks = WatermarkStore(os.path.join(self.state_dir, "watermarks"))
         self.extra_watermarks = [
             WatermarkStore(
@@ -311,12 +402,9 @@ class CdcStream:
             )
             for i in range(len(self.extra_tables))
         ]
-        self.metrics = MetricsTable(os.path.join(self.state_dir, "metrics"))
-        self.checkpoint_dir = os.path.join(self.state_dir, "checkpoint")
         self.dead_letter_dir = (
             os.path.join(self.state_dir, "dead_letter") if self.dead_letter else None
         )
-        self.batch_stats: list[dict] = []
         self.exporter = None
         if self.replicate_to:
             from etl_spark.lake.export import ChangeFeedExporter
@@ -370,32 +458,13 @@ class CdcStream:
                 lambda: self._dedup_ingest(batch_df, batch_id),
                 attempts=self.retry_attempts,
             )
-        self.batch_stats.append(stats)
-        applied = len([s for s in self.batch_stats if not s.get("skipped")])
-        if (
-            self.views
-            and self.refresh_views_every
-            and not stats.get("skipped")
-            and applied % self.refresh_views_every == 0
-        ):
-            stats["view_refreshes"] = [
-                retry_with_backoff(v.refresh, attempts=self.retry_attempts)
-                for v in self.views
-            ]
-        if (
-            self.exporter is not None
-            and self.replicate_every
-            and not stats.get("skipped")
-            and applied % self.replicate_every == 0
-        ):
+        self._record(stats)
+        self._refresh_views(stats)
+        if self.exporter is not None and self._due(stats, self.replicate_every):
             stats["export"] = retry_with_backoff(
                 self.exporter.export_once, attempts=self.retry_attempts
             )
-        cadence_due = (
-            self.compact_every
-            and not stats.get("skipped")
-            and applied % self.compact_every == 0
-        )
+        cadence_due = self._due(stats, self.compact_every)
         # Backlog-aware trigger for merge-on-read: compact when the
         # accumulated delta/equality-delete rows (the shadow-key set every
         # read joins against) exceed the threshold — a pure manifest-sum
@@ -457,12 +526,7 @@ class CdcStream:
             # batch's window never mixes a compaction/rebucket with real
             # changes — a mixed window cannot bucket-prune its diff
             stats["export_after_maintenance"] = self.exporter.export_once()
-        if (
-            self.catalog is not None
-            and self.publish_every
-            and not stats.get("skipped")
-            and applied % self.publish_every == 0
-        ):
+        if self.catalog is not None and self._due(stats, self.publish_every):
             # AFTER maintenance so the published checkpoint includes any
             # compaction/retention commits of this tick
             stats["catalog_version"] = retry_with_backoff(
@@ -643,36 +707,8 @@ class CdcStream:
         self.commit_log.commit(src, batch_id, {"near_dup_pairs": n_pairs})
         return n_pairs
 
-    def start(self):
-        schema = discover_wal_schema(self.spark, self.wal_dir)
-        per_trigger = self.max_files_per_trigger
-        if self.adaptive_trigger_rows is not None:
-            per_trigger = adaptive_files_per_trigger(
-                self.wal_dir,
-                int(self.adaptive_trigger_rows),
-                floor=self.max_files_per_trigger,
-            )
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("basePath", self.wal_dir)
-            .option("maxFilesPerTrigger", per_trigger)
-            .parquet(self.wal_dir)
-        )
-        self.query = (
-            stream.writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self.query
-
     def run_to_completion(self) -> list[dict]:
-        """Process every currently-available WAL segment, then stop
-        (availableNow trigger). Re-invoking after new segments arrive — or
-        after a crash — resumes from the streaming checkpoint, with the
-        commit log + watermarks making any replayed batch a no-op."""
-        q = self.start()
-        q.awaitTermination()
+        super().run_to_completion()
         if self.catalog is not None:
             # final checkpoint: a drained replay is never left with its
             # tail batches unpublished (no-op when already current)
@@ -692,7 +728,7 @@ def run_stream(
 
 
 @dataclass
-class Scd2Stream:
+class Scd2Stream(WalTail):
     """History-preserving streaming CDC: WAL tail -> foreachBatch(apply_scd2).
 
     Where ``CdcStream`` converges the lake table to the LATEST state per
@@ -724,7 +760,7 @@ class Scd2Stream:
     carry_cols: list[str] = field(default_factory=lambda: ["ts"])
     tiebreak: list[str] | None = None
     max_files_per_trigger: int = 8
-    # backlog-aware trigger coalescing, same contract as CdcStream
+    # row-sized trigger coalescing, same contract as CdcStream
     # (apply_scd2 is whole-batch windowed, so intra-batch order is
     # resolved by (time_col, tiebreak) regardless of segment grouping)
     adaptive_trigger_rows: int | None = None
@@ -732,14 +768,10 @@ class Scd2Stream:
     query: object = field(default=None, init=False)
 
     def __post_init__(self) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
-        self.commit_log = CommitLog(os.path.join(self.state_dir, "commits"))
-        self.metrics = MetricsTable(os.path.join(self.state_dir, "metrics"))
-        self.checkpoint_dir = os.path.join(self.state_dir, "checkpoint")
-        self.batch_stats: list[dict] = []
+        super().__post_init__()
         self.payload_cols: list[str] | None = None
 
-    def _payload_for(self, wal_schema: T.StructType) -> list[str]:
+    def _on_wal_schema(self, wal_schema: T.StructType) -> None:
         """Stop-evolve-resume: the payload is the table's payload UNION
         any brand-new WAL column (minus key/time/op/carry and the binlog
         meta columns) — so a restart after a WAL DDL evolves the SCD2
@@ -764,14 +796,14 @@ class Scd2Stream:
             f.name for f in wal_schema.fields
             if f.name not in reserved and f.name not in payload
         ]
-        return payload
+        self.payload_cols = payload
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         from etl_spark.cdc.scd2 import apply_scd2
 
         t0 = time.time()
         if self.commit_log.is_committed(self.source_name, batch_id):
-            self.batch_stats.append(
+            self._record(
                 {"batch_id": batch_id, "skipped": True, "events_applied": 0}
             )
             return
@@ -802,33 +834,4 @@ class Scd2Stream:
                 "latency_ms": stats["latency_ms"],
             }],
         )
-        self.batch_stats.append(stats)
-
-    def start(self):
-        schema = discover_wal_schema(self.spark, self.wal_dir)
-        self.payload_cols = self._payload_for(schema)
-        per_trigger = self.max_files_per_trigger
-        if self.adaptive_trigger_rows is not None:
-            per_trigger = adaptive_files_per_trigger(
-                self.wal_dir,
-                int(self.adaptive_trigger_rows),
-                floor=self.max_files_per_trigger,
-            )
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("basePath", self.wal_dir)
-            .option("maxFilesPerTrigger", per_trigger)
-            .parquet(self.wal_dir)
-        )
-        self.query = (
-            stream.writeStream.foreachBatch(self._apply)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self.query
-
-    def run_to_completion(self) -> list[dict]:
-        q = self.start()
-        q.awaitTermination()
-        return self.batch_stats
+        self._record(stats)

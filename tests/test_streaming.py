@@ -70,11 +70,25 @@ def test_stream_full_replay_converges(spark, tmp_path):
     assert wm == {int(k): int(v) for k, v in exp_wm.items()}
 
 
-def test_stream_resume_after_new_segments(spark, tmp_path):
+# SPEC writes ~22-row segments: 45 rows is ~2 segments per trigger
+@pytest.mark.parametrize("adaptive_trigger_rows", [None, 45])
+def test_stream_resume_after_new_segments(
+    spark, tmp_path, adaptive_trigger_rows
+):
     """Tail phase-1 WAL; later phase-2 segments (which introduce the `tool`
     column = schema evolution) arrive; a restarted stream applies only the
     new data and converges. Mirrors the reference's resume-from-checkpoint
-    (/root/reference/v2/etl.go:67-74)."""
+    (/root/reference/v2/etl.go:67-74). With a row-sized trigger the
+    restart re-sizes it over the WAL as it is then, and the new files
+    replay in ceil(new files / files-per-trigger) batches."""
+    from etl_spark.streaming.stream import adaptive_files_per_trigger
+
+    # floor 1 so the row target, not the static floor, sizes the trigger
+    kw = (
+        {} if adaptive_trigger_rows is None
+        else {"adaptive_trigger_rows": adaptive_trigger_rows,
+              "max_files_per_trigger": 1}
+    )
     pdf = generate_changelog(SPEC)
     cut = int(len(pdf) * SPEC.evolution_cutover)
     early = pdf[pdf["_seq"] < cut]
@@ -84,7 +98,7 @@ def test_stream_resume_after_new_segments(spark, tmp_path):
     write_changelog(early, wal, spec_early)
     table = make_target(spark, tmp_path)
     state = str(tmp_path / "state")
-    s1 = CdcStream(spark, wal, table, state)
+    s1 = CdcStream(spark, wal, table, state, **kw)
     s1.run_to_completion()
     assert_converged(table, early)
     batches_phase1 = len(s1.batch_stats)
@@ -95,18 +109,27 @@ def test_stream_resume_after_new_segments(spark, tmp_path):
     # move phase-2 files into the same WAL under distinct names
     import shutil
 
+    new_files = 0
     for root, _d, names in os.walk(str(tmp_path / "wal2")):
         for n in names:
             rel = os.path.relpath(root, str(tmp_path / "wal2"))
             dst = os.path.join(wal, rel)
             os.makedirs(dst, exist_ok=True)
             shutil.move(os.path.join(root, n), os.path.join(dst, "late-" + n))
+            new_files += n.endswith(".parquet")
 
-    s2 = CdcStream(spark, wal, table, state)
+    s2 = CdcStream(spark, wal, table, state, **kw)
     s2.run_to_completion()
     assert len(s2.batch_stats) > 0
-    applied = sum(s["rows_in"] for s in s2.batch_stats if not s.get("skipped"))
+    done = [s for s in s2.batch_stats if not s.get("skipped")]
+    applied = sum(s["rows_in"] for s in done)
     assert applied == len(late)  # phase-1 data not reprocessed
+    if adaptive_trigger_rows is not None:
+        per_trigger = adaptive_files_per_trigger(
+            wal, adaptive_trigger_rows, floor=1
+        )
+        assert per_trigger > 1
+        assert len(done) == -(-new_files // per_trigger)
     assert_converged(table, pdf)  # includes evolved `tool` column
 
 

@@ -11,9 +11,10 @@ frame's executed plan, and diffs against the committed manifest.
     python tools/plan_audit.py name ...   # restrict to named entries
 
 Counted per entry:
-  exchanges   "Exchange hashpartitioning"/"Exchange rangepartitioning"
-              (shuffles; "BroadcastExchange" contains the bare substring
-              "Exchange", so bare-substring counting would lie)
+  exchanges   "Exchange hashpartitioning"/"Exchange rangepartitioning"/
+              "Exchange SinglePartition" (shuffles; "BroadcastExchange"
+              contains the bare substring "Exchange", so bare-substring
+              counting would lie)
   broadcasts  "BroadcastExchange"
   expands     "Expand" (unpivot/rollup row multiplication)
 
