@@ -1263,85 +1263,6 @@ def run_scaling(
     }
 
 
-def run_scaling_procs(
-    wal_dir: str,
-    n_events: int,
-    n_procs: int = 4,
-    threads_per_proc: int = 2,
-    trials: int = int(os.environ.get("SPARK_GRAFT_SCALE_TRIALS", "1")),
-) -> dict:
-    """N vs 4N as independent PROCESSES — the closer proxy for executor
-    counts, since cluster executors are separate JVMs on separate hosts
-    (and this sandbox demonstrably scales processes, while threads inside
-    one JVM hit a host ceiling, see BENCH.md). Conversations are hash-
-    assigned to WAL source partitions (verified partition-disjoint), so
-    sharding the replay by partition dirs is semantically exact: the union
-    of shard tables is the full converged state. Level 1 = one process
-    over the whole WAL; level N = n_procs concurrent processes over
-    disjoint partition shards; throughput = total events / wall of the
-    slowest shard batch (incl. per-process JVM startup, just like per-
-    executor startup)."""
-    import subprocess
-
-    parts = sorted(
-        d for d in os.listdir(wal_dir)
-        if os.path.isdir(os.path.join(wal_dir, d))
-    )
-    shard_root = tempfile.mkdtemp(prefix="etl_spark_shards_")
-    shards: list[str] = []
-    for s in range(n_procs):
-        sdir = os.path.join(shard_root, f"shard{s}")
-        os.makedirs(sdir)
-        for d in parts[s::n_procs]:
-            os.symlink(os.path.join(wal_dir, d), os.path.join(sdir, d))
-        shards.append(sdir)
-
-    def one_trial(shard_dirs: list[str]) -> float:
-        """Run one replay process per shard dir concurrently; return the
-        level's replay seconds = max over shards of each process's
-        internally-measured replay_sec (JVM/session startup excluded on
-        BOTH levels, exactly as the thread-mode numbers are measured —
-        executors on a real cluster amortize startup over long jobs).
-        Startups run concurrently, so the slowest shard's replay window
-        is the level's wall."""
-        outs = [tempfile.mktemp(suffix=".json") for _ in shard_dirs]
-        procs = [
-            subprocess.Popen(
-                [sys.executable, os.path.abspath(__file__), "--replay-only",
-                 str(threads_per_proc), sd, "0", out],
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-            )
-            for sd, out in zip(shard_dirs, outs)
-        ]
-        for p in procs:
-            if p.wait() != 0:
-                raise RuntimeError("shard replay failed")
-        walls = []
-        for out in outs:
-            with open(out) as fh:
-                walls.append(json.load(fh)["replay_sec"])
-            os.remove(out)
-        return max(walls)
-
-    best: dict[int, float] = {}
-    for _ in range(trials):
-        for level, dirs in ((1, [wal_dir]), (n_procs, shards)):
-            wall = one_trial(dirs)
-            if level not in best or wall < best[level]:
-                best[level] = wall
-    shutil.rmtree(shard_root, ignore_errors=True)
-    t_1 = n_events / best[1]
-    t_n = n_events / best[n_procs]
-    return {
-        "mode": "processes",
-        "levels": [1, n_procs],
-        "threads_per_proc": threads_per_proc,
-        "walls": [round(best[1], 2), round(best[n_procs], 2)],
-        "throughput": [round(t_1, 1), round(t_n, 1)],
-        "efficiency": round((t_n / t_1) / n_procs, 3),
-    }
-
-
 def main() -> None:
     if "--replay-only" in sys.argv:
         i = sys.argv.index("--replay-only")
@@ -1449,7 +1370,6 @@ def main() -> None:
                 for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "2,8").split(",")
             )
             factor = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "16"))
-            mode = os.environ.get("SPARK_GRAFT_SCALE_MODE", "threads")
             if factor > 1:
                 # The scaling criterion needs a compute-bound job: inflate
                 # the WAL so executor work dominates the per-batch driver
@@ -1457,16 +1377,7 @@ def main() -> None:
                 big = os.path.join(work_dir, "wal_big")
                 n_big = inflate_wal(wal_dir, big, factor)
                 os.environ["SPARK_GRAFT_MAX_FILES_PER_TRIGGER"] = "100000"
-                if mode == "processes":
-                    result["scaling"] = run_scaling_procs(
-                        big, n_big,
-                        n_procs=levels[-1] // max(levels[0], 1),
-                        threads_per_proc=int(
-                            os.environ.get("SPARK_GRAFT_THREADS_PER_PROC", "2")
-                        ),
-                    )
-                else:
-                    result["scaling"] = run_scaling(big, n_big, levels)
+                result["scaling"] = run_scaling(big, n_big, levels)
             else:
                 result["scaling"] = run_scaling(wal_dir, n_events, levels)
         print(json.dumps(result))

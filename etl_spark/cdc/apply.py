@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from etl_spark.cdc.state import CommitLog, WatermarkStore, filter_by_watermarks
 from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.lake import LakeTable
+from etl_spark.lake.table import bucket_of
 
 # Order columns, most significant first: event time, then LSN, then source
 # partition (LSNs are only unique within a partition — the final tiebreak
@@ -301,14 +302,7 @@ def apply_batch(
             F.col("source_partition")
             if "source_partition" in stats_df.columns
             else F.lit(-1).alias("source_partition"),
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in tsnap.bucket_by]),
-                F.lit(tsnap.n_buckets),
-            )
-            .cast("int")
-            .alias("_bucket")
-            if tsnap.n_buckets > 0
-            else F.lit(0).alias("_bucket"),
+            bucket_of(tsnap.bucket_by, tsnap.n_buckets).alias("_bucket"),
         ]
         lsn = F.col("lsn") if "lsn" in stats_df.columns else F.lit(None).cast("long")
         cells = (

@@ -59,7 +59,7 @@ import os
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +68,7 @@ from etl_spark.cdc.apply import dedup_last_writer_wins
 from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.cdc.state import CommitLog, WatermarkStore, filter_by_watermarks
 from etl_spark.lake import LakeTable
+from etl_spark.lake.table import bucket_of
 from etl_spark.streaming.stream import WalTail, retry_with_backoff
 
 
@@ -185,14 +186,7 @@ def route_batch(
         p = F.col(op_col).isin("I", "U", "D")
         for k in info["key"]:
             p = p & F.col(k).isNotNull()
-        b = (
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in info["bucket_by"]]),
-                F.lit(info["n_buckets"]),
-            ).cast("int")
-            if info["n_buckets"] > 0
-            else F.lit(0)
-        )
+        b = bucket_of(info["bucket_by"], info["n_buckets"])
         if valid_expr is None:
             valid_expr = F.when(tbl == name, p)
             bucket_expr = F.when(tbl == name, b)
@@ -377,12 +371,13 @@ class RoutedCdcStream(WalTail):
     dead-letter directory it needs, view refresh and the per-destination
     maintenance tick."""
 
+    # commit-log stream name: existing state dirs' markers carry it
+    source_name: ClassVar[str] = "wal"
     spark: SparkSession
     wal_dir: str
     catalog: Any
     state_dir: str
     table_col: str = "dest_table"
-    source_name: str = "wal"
     tables: list[str] | None = None
     transforms: dict[str, Callable[[DataFrame], DataFrame]] | None = None
     evolve: dict[str, Sequence[str]] | None = None
@@ -400,8 +395,6 @@ class RoutedCdcStream(WalTail):
     # shape); pair with compact_every so every destination's delta
     # backlog stays bounded.
     merge_mode: str = "cow"
-    dead_letter: bool = True
-    retry_attempts: int = 3
     repair_diverged: bool = False
     # False when any transforms[name] rewrites key/bucket column values:
     # those destinations' merges recount their bucket histogram from the
@@ -419,11 +412,10 @@ class RoutedCdcStream(WalTail):
     expire_keep_last: int = 3
     # Downstream incremental materialized views over routed destinations
     # (lake.derived / lake.joinview — anything with .refresh()),
-    # refreshed after every N applied batches, same duck-typed cadence
-    # contract as CdcStream.views: refreshes are exactly-once on their
-    # own watermark, so a crashed cadence just catches up next time.
+    # refreshed after every applied batch, same duck-typed contract as
+    # CdcStream.views: refreshes are exactly-once on their own
+    # watermark, so a crashed refresh just catches up next time.
     views: list = field(default_factory=list)
-    refresh_views_every: int = 1
     query: object = field(default=None, init=False)
 
     def __post_init__(self) -> None:
@@ -431,11 +423,7 @@ class RoutedCdcStream(WalTail):
         self.watermarks = WatermarkStore(
             os.path.join(self.state_dir, "watermarks")
         )
-        self.dead_letter_dir = (
-            os.path.join(self.state_dir, "dead_letter")
-            if self.dead_letter
-            else None
-        )
+        self.dead_letter_dir = os.path.join(self.state_dir, "dead_letter")
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         stats = retry_with_backoff(
@@ -462,7 +450,6 @@ class RoutedCdcStream(WalTail):
                     self.transforms_preserve_keys_and_validity
                 ),
             ),
-            attempts=self.retry_attempts,
         )
         self._record(stats)
         self._refresh_views(stats)

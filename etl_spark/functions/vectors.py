@@ -38,16 +38,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_c(a), _c(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def normalize_vec(a: Column | str) -> Column:
     """Unit-normalize so cosine reduces to dot at query time (do it once at
     ingest, not per comparison)."""

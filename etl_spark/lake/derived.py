@@ -52,7 +52,7 @@ import os
 import re
 from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,7 +66,7 @@ _REFRESH_RE = re.compile(r"^(?:merge:|overwrite:)?refresh:(\d+)$")
 # the fingerprint sync views for the same single-definition reason
 from etl_spark.lake.table import maintenance_only as _maintenance_only  # noqa: E402
 from etl_spark.lake.table import last_note_match as _last_note_match  # noqa: E402
-from etl_spark.lake.table import retraction_weight  # noqa: E402
+from etl_spark.lake.table import any_null, retraction_weight  # noqa: E402
 from etl_spark.lake.table import SchemaEvolutionError, _widen  # noqa: E402
 
 # decimal accumulator for float sums: exact addition makes the
@@ -83,13 +83,6 @@ _KINDS = _DELTA_KINDS | {"min", "max", "expr"}
 # retraction weight of a pre-image change-feed row — single definition
 # in lake.table next to the label producer
 _w = retraction_weight
-
-
-def _any_null(cols: list[str]) -> Column:
-    out = F.lit(False)
-    for c in cols:
-        out = out | F.col(c).isNull()
-    return out
 
 
 def _guard_null_groups(hist: list, gb: list[str]) -> None:
@@ -387,7 +380,7 @@ class IncrementalAggView:
                 delta.groupBy(bexpr.alias("__b"))
                 .agg(
                     F.count(F.lit(1)).alias("__n"),
-                    F.max(_any_null(gb)).alias("__nullkey"),
+                    F.max(any_null(gb)).alias("__nullkey"),
                 )
                 .collect()
             )
@@ -470,7 +463,7 @@ class IncrementalAggView:
                 affected.groupBy(bexpr.alias("__b"))
                 .agg(
                     F.count(F.lit(1)).alias("__n"),
-                    F.max(_any_null(gb)).alias("__nullkey"),
+                    F.max(any_null(gb)).alias("__nullkey"),
                 )
                 .collect()
             )

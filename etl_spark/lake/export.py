@@ -53,9 +53,9 @@ diff's base: a lagging feed costs bounded extra retention instead of a
 broken chain. (Two exporters racing on one feed dir share the tag; the
 loser's stale-pin sweep can transiently unpin the winner's newer
 cursor, which the winner's next advance re-pins — the window equals
-the pre-pinning exposure and heals itself.) With ``pin_cursor=False``
-(or a pin dropped out-of-band) the old contract applies: a cursor
-below the retention floor raises with the recovery spelled out —
+the pre-pinning exposure and heals itself.) If a pin is dropped
+out-of-band, a cursor below the retention floor raises with the
+recovery spelled out —
 ``reset_cursor(0)`` — since a cursor at 0 exports the CURRENT snapshot
 directly as an all-inserts full-load window (no diff, no dependence on
 retained history), valid at any retention state. Full loads are
@@ -96,13 +96,11 @@ class ChangeFeedExporter:
         out_dir: str,
         *,
         table_name: str | None = None,
-        pin_cursor: bool = True,
     ):
         self.table = table
         self.out_dir = os.path.abspath(out_dir)
         os.makedirs(self.out_dir, exist_ok=True)
         self.table_name = table_name or os.path.basename(table.path)
-        self.pin_cursor = pin_cursor
         # feed-dir-unique ref prefix: two feeds exporting one table must
         # not reconcile away each other's cursor pins (same pattern as
         # Catalog._tag)
@@ -135,7 +133,7 @@ class ChangeFeedExporter:
         if not force and version <= self.cursor():
             return
         pref = f"feed{self._pin_tag}-v"
-        if self.pin_cursor and version > 0:
+        if version > 0:
             # pin FIRST: the cursor file must never point at a version
             # expiry could still reclaim (a crash here leaves an extra
             # pin the next advance's sweep drops)
@@ -158,15 +156,14 @@ class ChangeFeedExporter:
                 fh,
             )
         os.replace(tmp, self._cursor_file())
-        if self.pin_cursor:
-            # sweep stale pins (reset_cursor(0) drops them all: a full
-            # load needs no retained history)
-            for ref, rv in self.table.refs().items():
-                if ref.startswith(pref) and rv != version:
-                    try:
-                        self.table.drop_ref(ref)
-                    except FileNotFoundError:
-                        pass
+        # sweep stale pins (reset_cursor(0) drops them all: a full load
+        # needs no retained history)
+        for ref, rv in self.table.refs().items():
+            if ref.startswith(pref) and rv != version:
+                try:
+                    self.table.drop_ref(ref)
+                except FileNotFoundError:
+                    pass
 
     def _cursor_state(self) -> dict:
         try:

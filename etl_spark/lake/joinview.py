@@ -62,6 +62,8 @@ from pyspark.sql import types as T
 
 from etl_spark.lake.table import (
     LakeTable,
+    any_null,
+    bucket_of,
     last_note_match,
     maintenance_only,
     retraction_weight,
@@ -70,25 +72,6 @@ from etl_spark.lake.table import (
 _VIEW_RE = re.compile(r"(?:^|:)refresh:(\d+)\.(\d+)$")
 _IDX_RE = re.compile(r"(?:^|:)refresh:(\d+)$")
 _OP = "__op"
-
-
-def _any_null(cols: list[str]) -> Column:
-    out = F.lit(False)
-    for c in cols:
-        out = out | F.col(c).isNull()
-    return out
-
-
-def _bucket_expr_as(snap, cols: list[str]) -> Column:
-    """``pmod(xxhash64(cols), n_buckets)`` with substituted column names —
-    must mirror ``LakeTable._bucket_expr`` (etl_spark/lake/table.py)
-    bit-for-bit so driver-side bucket sets computed over fk-named frames
-    match the target table's physical layout."""
-    if snap.n_buckets <= 0:
-        return F.lit(0).cast("int")
-    return F.pmod(
-        F.xxhash64(*[F.col(c) for c in cols]), F.lit(snap.n_buckets)
-    ).cast("int")
 
 
 class IncrementalJoinView:
@@ -381,27 +364,27 @@ class IncrementalJoinView:
             src_keys: DataFrame | None = None
 
             # bucket expressions for every layout the accounting needs,
-            # evaluated over fk-/left-named frames (must mirror the
-            # tables' physical layouts — _bucket_expr_as)
+            # evaluated over fk-/left-named frames through bucket_of, the
+            # tables' one physical-layout expression
             isnap_h = self.index.snapshot(buckets=set())
             vsnap_h = self.table.snapshot(buckets=set())
             lsnap_h = self.left.snapshot(lv, buckets=set())
             rsnap_h = self.right.snapshot(rv, buckets=set())
-            i_b = _bucket_expr_as(isnap_h, isnap_h.bucket_by)
-            v_b = _bucket_expr_as(vsnap_h, vsnap_h.bucket_by)
+            i_b = bucket_of(isnap_h.bucket_by, isnap_h.n_buckets)
+            v_b = bucket_of(vsnap_h.bucket_by, vsnap_h.n_buckets)
             # right bucket cols positionally renamed to their fk columns
-            r_b_fk = _bucket_expr_as(
-                rsnap_h,
+            r_b_fk = bucket_of(
                 [self.on[list(self.right.key).index(b)]
                  for b in rsnap_h.bucket_by],
+                rsnap_h.n_buckets,
             )
             # index bucket cols (== self.on) renamed to right-key names
-            i_b_rk = _bucket_expr_as(
-                isnap_h,
+            i_b_rk = bucket_of(
                 [list(self.right.key)[self.on.index(b)]
                  for b in isnap_h.bucket_by],
+                isnap_h.n_buckets,
             )
-            r_b = _bucket_expr_as(rsnap_h, rsnap_h.bucket_by)
+            r_b = bucket_of(rsnap_h.bucket_by, rsnap_h.n_buckets)
 
             # ---- ONE fused stats action for BOTH deltas: the left
             # window's (index/view/right)-bucket histograms and the
@@ -414,7 +397,7 @@ class IncrementalJoinView:
                     lch.groupBy(
                         i_b.alias("__ib"), v_b.alias("__vb"),
                         r_b_fk.alias("__rb"),
-                        _any_null(self.on).alias("__nullfk"),
+                        any_null(self.on).alias("__nullfk"),
                         # post-image rows are the only ones that probe the
                         # dimension; delete/pre-image rows must not widen
                         # the rprobe bucket set (ADVICE r3)
@@ -480,7 +463,7 @@ class IncrementalJoinView:
                     self._recover_index(il, lv)
                 elif idx_pb:
                     idx_delta = (
-                        lch.filter(~_any_null(self.on))
+                        lch.filter(~any_null(self.on))
                         .groupBy(*self.idx_cols)
                         .agg(F.sum(w).alias("__w"))
                         .filter(F.col("__w") != 0)
@@ -508,7 +491,7 @@ class IncrementalJoinView:
                             F.col(c).alias(rk)
                             for c, rk in zip(self.on, self.right.key)
                         ]
-                    ).filter(~_any_null(self.right.key)),
+                    ).filter(~any_null(self.right.key)),
                     buckets=r_buckets, version=rv,
                     broadcast=n_l <= self.broadcast_threshold,
                     per_bucket=r_pb,
@@ -552,7 +535,7 @@ class IncrementalJoinView:
                 try:
                     # ONE stats action: affected count + left-table and
                     # view-bucket histograms
-                    l_b = _bucket_expr_as(lsnap_h, lsnap_h.bucket_by)
+                    l_b = bucket_of(lsnap_h.bucket_by, lsnap_h.n_buckets)
                     _t0 = time.time()
                     stats_a = (
                         aff.groupBy(l_b.alias("__lb"), v_b.alias("__vb"))
@@ -640,14 +623,14 @@ class IncrementalJoinView:
             # retention outran the crash watermark — bounded heal of
             # JUST the index (the view replays its own window normally)
             self.index.overwrite(
-                self.left.read(lv).filter(~_any_null(self.on))
+                self.left.read(lv).filter(~any_null(self.on))
                 .select(*self.idx_cols),
                 op_note=note,
             )
             return
-        ich = ich.filter(~_any_null(self.on))
+        ich = ich.filter(~any_null(self.on))
         isnap_h = self.index.snapshot(buckets=set())
-        i_b = _bucket_expr_as(isnap_h, isnap_h.bucket_by)
+        i_b = bucket_of(isnap_h.bucket_by, isnap_h.n_buckets)
         idx_pb = {
             r["__ib"]: r["__n"]
             for r in ich.groupBy(i_b.alias("__ib"))
@@ -710,7 +693,7 @@ class IncrementalJoinView:
         rv = self.right.current_version() if rv is None else rv
         lrows = self.left.read(lv)
         self.index.overwrite(
-            lrows.filter(~_any_null(self.on)).select(*self.idx_cols),
+            lrows.filter(~any_null(self.on)).select(*self.idx_cols),
             op_note=f"refresh:{lv}",
         )
         r, cond = self._right_renamed(self.right.read(rv))

@@ -98,11 +98,8 @@ class CatalogReplicator:
         table_root: str | None = None,
         merge_mode: str = "cow",
         metrics: MetricsTable | None = None,
-        bootstrap: str = "direct",
         compact_when_delta_rows: int = 0,
     ):
-        if bootstrap not in ("direct", "feed"):
-            raise ValueError("bootstrap must be 'direct' or 'feed'")
         self.spark = spark
         self.primary = primary
         self.replica = replica
@@ -112,7 +109,6 @@ class CatalogReplicator:
         )
         self.merge_mode = merge_mode
         self.metrics = metrics
-        self.bootstrap = bootstrap
         self.compact_when_delta_rows = compact_when_delta_rows
 
     # ------------------------------------------------------------ helpers
@@ -190,11 +186,7 @@ class CatalogReplicator:
             )
             rt = self._replica_table(name, src, pinned)
             boot_rows = 0
-            if (
-                self.bootstrap == "direct"
-                and exporter.cursor() == 0
-                and pinned > 0
-            ):
+            if exporter.cursor() == 0 and pinned > 0:
                 # Parquet-native bootstrap: at 100 TB a full-load FEED
                 # window ships the whole table as Debezium JSON text
                 # (~10x the parquet bytes) and parses it back; instead,
@@ -205,8 +197,6 @@ class CatalogReplicator:
                 # start the feed cursor AT the pinned version — crash
                 # anywhere replays as a commit-log no-op, and a later
                 # feed window for this version is skipped by the marker.
-                # (`bootstrap="feed"` keeps the self-contained-feed shape
-                # for deployments whose consumers tail the feed dir.)
                 boot = apply_batch(
                     self.spark,
                     # lsn mirrors the feed envelope's (= window

@@ -540,37 +540,28 @@ class LakeTable:
     ) -> Snapshot:
         with open(path) as fh:
             d = json.load(fh)
-        if "files" not in d:
-            # manifest-list format: per-bucket immutable manifests,
-            # referenced by content hash (legacy inline `files` still read)
-            refs = d["manifest_refs"]
-            if buckets is not None:
-                # ref names are b{bucket:06d}-{hash}.json
-                want = {f"b{b:06d}-" for b in buckets}
-                refs = [
-                    r for r in refs
-                    if os.path.basename(r)[:8] in want
-                ]
-            d["files"] = [
-                e for ref in refs for e in self._load_manifest(ref)
-            ]
-        elif buckets is not None:
-            d["files"] = [e for e in d["files"] if e["bucket"] in buckets]
+        # manifest-list format: per-bucket immutable manifests, referenced
+        # by content hash
+        refs = d["manifest_refs"]
+        if buckets is not None:
+            # ref names are b{bucket:06d}-{hash}.json
+            want = {f"b{b:06d}-" for b in buckets}
+            refs = [r for r in refs if os.path.basename(r)[:8] in want]
         return Snapshot(
             version=d["version"],
             schema=T.StructType.fromJson(d["schema"]),
             key=d["key"],
             bucket_by=d["bucket_by"],
             n_buckets=d["n_buckets"],
-            files=d["files"],
+            files=[e for ref in refs for e in self._load_manifest(ref)],
             schemas=d["schemas"],
             op=d["op"],
             ts=d["ts"],
-            stats_cols=d.get("stats_cols", []),
-            bloom_cols=d.get("bloom_cols", []),
-            bloom_ndv=d.get("bloom_ndv", 1_000_000),
-            write_sort_by=d.get("write_sort_by", []),
-            write_max_rows_per_file=d.get("write_max_rows_per_file", 0),
+            stats_cols=d["stats_cols"],
+            bloom_cols=d["bloom_cols"],
+            bloom_ndv=d["bloom_ndv"],
+            write_sort_by=d["write_sort_by"],
+            write_max_rows_per_file=d["write_max_rows_per_file"],
         )
 
     def _write_manifests(self, files: list[dict[str, Any]]) -> list[str]:
@@ -1320,12 +1311,8 @@ class LakeTable:
         return pred
 
     # ----------------------------------------------------------------- write
-    def _bucket_expr(self, snap: Snapshot):
-        if snap.n_buckets <= 0:
-            return F.lit(0)
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in snap.bucket_by]), F.lit(snap.n_buckets)
-        ).cast("int")
+    def _bucket_expr(self, snap: Snapshot) -> Column:
+        return bucket_of(snap.bucket_by, snap.n_buckets)
 
     def _write_data_files(
         self, snap_version: int, df: DataFrame, n_buckets: int = 0,
@@ -3123,9 +3110,7 @@ class LakeTable:
         if n_buckets <= 0:
             raise ValueError("n_buckets must be positive")
         base = self.snapshot()
-        bucket = F.pmod(
-            F.xxhash64(*[F.col(c) for c in base.bucket_by]), F.lit(n_buckets)
-        ).cast("int")
+        bucket = bucket_of(base.bucket_by, n_buckets)
         df = self.read().withColumn(_BUCKET_COL, bucket)
         new_files = self._write_data_files(
             base.version + 1, df, n_buckets, stats_cols=base.stats_cols,
@@ -3454,7 +3439,7 @@ class LakeTable:
             if os.path.exists(src):
                 with open(src) as fh:
                     bd = json.load(fh)
-                if bd.get("manifest_refs") != md.get("manifest_refs"):
+                if bd["manifest_refs"] != md["manifest_refs"]:
                     break  # same tag, different content: do not discard
                 os.remove(src)
             _advance_fork(nxt)
@@ -3569,10 +3554,10 @@ class LakeTable:
                 if not os.path.exists(self._snap_path(kv)):
                     continue
                 with open(self._snap_path(kv)) as fh:
-                    live_refs |= set(json.load(fh).get("manifest_refs", []))
+                    live_refs |= set(json.load(fh)["manifest_refs"])
             for p in self._staged_wap_files() + self._branch_snapshots():
                 with open(p) as fh:
-                    live_refs |= set(json.load(fh).get("manifest_refs", []))
+                    live_refs |= set(json.load(fh)["manifest_refs"])
             for n in os.listdir(mdir):
                 if (
                     n.endswith(".json")
@@ -3719,6 +3704,27 @@ def maintenance_only(table: LakeTable, last: int, cur: int) -> bool:
         )
     except FileNotFoundError:
         return False
+
+
+def bucket_of(cols: list[str], n_buckets: int) -> Column:
+    """The bucket layout: ``pmod(xxhash64(cols), n_buckets)`` as int, 0
+    for an unbucketed table. Every writer, pruner and accounting pass
+    computes bucket ids through this one expression, so frames whose
+    columns carry other names (a join view's foreign keys) still land
+    on the target table's physical buckets."""
+    if n_buckets <= 0:
+        return F.lit(0)
+    return F.pmod(
+        F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)
+    ).cast("int")
+
+
+def any_null(cols: list[str]) -> Column:
+    """True when any of ``cols`` is NULL (a key no bucket or group owns)."""
+    out = F.lit(False)
+    for c in cols:
+        out = out | F.col(c).isNull()
+    return out
 
 
 def retraction_weight(col: str = "_change_type") -> Column:

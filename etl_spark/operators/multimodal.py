@@ -170,9 +170,15 @@ def decode_media_meta(df: DataFrame, data_col: str = "data") -> DataFrame:
                     widths.append(w); heights.append(h); durs.append(None)
                     sizes.append(len(blob))
                     continue
-                if raw[:2] == b"BM" and len(raw) >= 26:
-                    # BITMAPINFOHEADER: i32-LE width/height at offsets
-                    # 18/22; height may be negative (top-down rows)
+                if (
+                    raw[:2] == b"BM"
+                    and len(raw) >= 26
+                    and _st.unpack("<I", raw[14:18])[0] >= 40
+                ):
+                    # BITMAPINFOHEADER (DIB header size >= 40): i32-LE
+                    # width/height at offsets 18/22; height may be
+                    # negative (top-down rows). Any other DIB header
+                    # (OS/2 BITMAPCOREHEADER's u16 dims) is a null row.
                     w, h = _st.unpack("<ii", raw[18:26])
                     widths.append(abs(w)); heights.append(abs(h))
                     durs.append(None); sizes.append(len(blob))

@@ -20,11 +20,11 @@ same machinery with a threshold instead of top-k.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_spark.functions.vectors import cosine_similarity, dot, normalize_vec  # noqa: F401
-from etl_spark.operators.dedup import _i64, _perm_constants
+from etl_spark.operators.dedup import _perm_constants
 
 
 def _unit(df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -80,49 +80,6 @@ def brute_force_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-    )
-
-
-def hyperplane_signature(
-    vec_col: Column | str, dim: int, bits: int = 16, seed: int = 7
-) -> Column:
-    """Random-hyperplane sign signature packed into a bigint. Hyperplane
-    coefficients come from a deterministic splitmix64 stream (same planes on
-    every executor / cluster size — no shipped state).
-
-    Built as ONE transform over a literal plane matrix (array of coefficient
-    arrays) + one packing aggregate — not one aggregate per bit, which made
-    the expression tree (and codegen time) scale with ``bits``."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    consts = _perm_constants(bits * dim, seed)
-    planes = F.array(
-        *[
-            F.array(
-                *[
-                    F.lit(float((consts[b * dim + j][0] % 2001) - 1000))
-                    for j in range(dim)
-                ]
-            )
-            for b in range(bits)
-        ]
-    )
-    projs = F.transform(
-        planes,
-        lambda p: F.aggregate(
-            F.zip_with(v, p, lambda x, c: x.cast("double") * c),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    bit_values = F.array(*[F.lit(_i64(1 << b)).cast("long") for b in range(bits)])
-    return F.aggregate(
-        F.zip_with(
-            projs,
-            bit_values,
-            lambda pr, bv: F.when(pr > 0, bv).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
     )
 
 

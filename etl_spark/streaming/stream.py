@@ -44,6 +44,7 @@ import random
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -204,23 +205,23 @@ class WalTail:
         )
 
     def _refresh_views(self, stats: dict) -> None:
-        """Refresh the stream's ``views`` on their cadence. Each refresh is
-        exactly-once on its own watermark, so a crashed cadence just
-        catches up at the next one."""
-        if self.views and self._due(stats, self.refresh_views_every):
+        """Refresh the stream's ``views`` after every applied batch. Each
+        refresh is exactly-once on its own watermark, so a crashed refresh
+        just catches up at the next batch."""
+        if self.views and not stats.get("skipped"):
             stats["view_refreshes"] = [
-                retry_with_backoff(v.refresh, attempts=self.retry_attempts)
-                for v in self.views
+                retry_with_backoff(v.refresh) for v in self.views
             ]
 
 
 @dataclass
 class CdcStream(WalTail):
+    # commit-log stream name: existing state dirs' markers carry it
+    source_name: ClassVar[str] = "wal"
     spark: SparkSession
     wal_dir: str
     table: LakeTable
     state_dir: str
-    source_name: str = "wal"
     transform: Callable[[DataFrame], DataFrame] | None = None
     # "post" defers a row-wise payload transform to after the LWW dedup —
     # ~churn x less transform work per batch (see apply_batch)
@@ -240,7 +241,6 @@ class CdcStream(WalTail):
     # None = static max_files_per_trigger.
     adaptive_trigger_rows: int | None = None
     salted_dedup: bool = False
-    dead_letter: bool = True
     # Out-of-order tolerant sink (LakeTable.merge lww_by): order columns
     # stored in the table and compared against incoming events; stale
     # events lose, deletes leave tombstones. Use when the WAL can replay
@@ -276,7 +276,6 @@ class CdcStream(WalTail):
     # let intra-batch stale re-emissions from an at-least-once producer
     # overwrite newer state in the secondaries.
     extra_tables: list[LakeTable] = field(default_factory=list)
-    retry_attempts: int = 3
     # Maintenance cadence: every N applied batches, rewrite each bucket's
     # accumulated per-commit files into one (LakeTable.compact) and drop
     # snapshots/files older than the newest `expire_keep_last`. A merge
@@ -308,10 +307,6 @@ class CdcStream(WalTail):
     # timestamp and integral columns supported. None disables.
     ttl_col: str | None = None
     ttl_age_s: float | None = None
-    # range-cluster each bucket on these columns during the periodic
-    # compaction (tight parquet row-group stats for time-range reads of
-    # the ingest table); None keeps arrival order
-    compact_sort_by: list[str] | None = None
     # Growth-aware bucket evolution: when live rows per bucket (manifest
     # sums, zero I/O) exceed this, DOUBLE the bucket count until back
     # under (LakeTable.rebucket, one atomic commit). Doubling makes the
@@ -328,9 +323,10 @@ class CdcStream(WalTail):
     # broadcast guard so shadow joins stay map-side between folds.
     compact_when_delta_rows: int = 0
     # Ingest-time near-dup detection (the training-data-pipeline stage):
-    # after each applied batch, the batch's post-dedup upsert TEXTS are
-    # probed against and appended to a persisted MinHash band index under
-    # state_dir/dedup (operators.incremental_dedup). Candidate pairs land
+    # after each applied batch, the batch's post-dedup upsert TEXTS (the
+    # `text` column) are probed against and appended to a persisted
+    # MinHash band index under state_dir/dedup
+    # (operators.incremental_dedup). Candidate pairs land
     # in dedup/pairs/batch=N, and dedup/keys/batch=N maps the internal
     # 64-bit doc ids (xxhash64 of the table key) back to key columns.
     # Exactly-once via its own commit-log stream + idempotent index MERGE:
@@ -338,7 +334,6 @@ class CdcStream(WalTail):
     # pair files. ``dedup_threshold`` additionally exact-verifies
     # WITHIN-batch pairs (index-side text is not stored).
     dedup_index: bool = False
-    dedup_text_col: str = "text"
     dedup_threshold: float | None = None
     # With ``dedup_verify`` (requires dedup_threshold), INDEX-side pairs
     # are exact-verified too: matched doc ids resolve back to key
@@ -356,21 +351,19 @@ class CdcStream(WalTail):
     # verify would drop anyway.
     dedup_prune_deletes: bool = False
     # Downstream incremental materialized views (lake.derived.*View over
-    # THIS table): refreshed every N applied batches. Each refresh is
+    # THIS table): refreshed after every applied batch. Each refresh is
     # exactly-once on its own (the applied-through source version commits
     # atomically with the view data), so a crash between table apply and
-    # view refresh just catches up at the next cadence — views may lag
-    # the table by < N batches but can never double-apply. 0 disables.
+    # view refresh just catches up at the next batch — views may lag the
+    # table by one batch but can never double-apply.
     views: list = field(default_factory=list)
-    refresh_views_every: int = 1
-    # Outbound change-feed publication (lake.export): every N applied
-    # batches, export the table's newest change window as Debezium-envelope
+    # Outbound change-feed publication (lake.export): after every applied
+    # batch, export the table's newest change window as Debezium-envelope
     # JSONL segments under `replicate_to` (crash-safe cursor, idempotent —
     # downstream replicas tail with lake.export.replicate_available).
     # Runs BEFORE the maintenance cadence so the export cursor always
     # advances ahead of expire_snapshots' retention floor. None disables.
     replicate_to: str | None = None
-    replicate_every: int = 1
     # Consumer-visibility checkpoints (lake.catalog): every N applied
     # batches — and once more when the replay drains — advance the
     # catalog's pointer for `catalog_name` to the table's newest snapshot
@@ -402,9 +395,7 @@ class CdcStream(WalTail):
             )
             for i in range(len(self.extra_tables))
         ]
-        self.dead_letter_dir = (
-            os.path.join(self.state_dir, "dead_letter") if self.dead_letter else None
-        )
+        self.dead_letter_dir = os.path.join(self.state_dir, "dead_letter")
         self.exporter = None
         if self.replicate_to:
             from etl_spark.lake.export import ChangeFeedExporter
@@ -431,7 +422,6 @@ class CdcStream(WalTail):
                 patch_touched_col=self.patch_touched_col,
                 skip_unchanged=self.skip_unchanged,
             ),
-            attempts=self.retry_attempts,
         )
         for i, extra in enumerate(self.extra_tables):
             retry_with_backoff(
@@ -451,19 +441,15 @@ class CdcStream(WalTail):
                     patch_touched_col=self.patch_touched_col,
                     skip_unchanged=self.skip_unchanged,
                 ),
-                attempts=self.retry_attempts,
             )
         if self.dedup_index:
             stats["near_dup_pairs"] = retry_with_backoff(
-                lambda: self._dedup_ingest(batch_df, batch_id),
-                attempts=self.retry_attempts,
+                lambda: self._dedup_ingest(batch_df, batch_id)
             )
         self._record(stats)
         self._refresh_views(stats)
-        if self.exporter is not None and self._due(stats, self.replicate_every):
-            stats["export"] = retry_with_backoff(
-                self.exporter.export_once, attempts=self.retry_attempts
-            )
+        if self.exporter is not None and not stats.get("skipped"):
+            stats["export"] = retry_with_backoff(self.exporter.export_once)
         cadence_due = self._due(stats, self.compact_every)
         # Backlog-aware trigger for merge-on-read: compact when the
         # accumulated delta/equality-delete rows (the shadow-key set every
@@ -485,16 +471,14 @@ class CdcStream(WalTail):
         if (cadence_due or backlog_due) and self.ttl_col is not None:
             stats["ttl"] = self._ttl_tick()
         if cadence_due:
-            self.table.compact(sort_by=self.compact_sort_by)
+            self.table.compact()
         elif backlog_due:
             # MINOR compaction: the fold debt lives entirely in the
             # buckets that hold delta/patch entries — rewrite only those
             # (every other bucket's manifest is re-referenced verbatim).
             # At 10^10 rows with skewed churn this is the difference
             # between folding a few hot buckets and rewriting the table.
-            self.table.compact(
-                sort_by=self.compact_sort_by, buckets=backlog_buckets
-            )
+            self.table.compact(buckets=backlog_buckets)
         if cadence_due or backlog_due:
             if self.expire_keep_last:
                 self.table.expire_snapshots(
@@ -512,10 +496,7 @@ class CdcStream(WalTail):
                 new_n = n * 2
                 while total > self.rebucket_when_bucket_rows * new_n:
                     new_n *= 2
-                retry_with_backoff(
-                    lambda: self.table.rebucket(new_n),
-                    attempts=self.retry_attempts,
-                )
+                retry_with_backoff(lambda: self.table.rebucket(new_n))
                 stats["rebucketed"] = {"from": n, "to": new_n, "rows": total}
         if (
             self.exporter is not None
@@ -530,8 +511,7 @@ class CdcStream(WalTail):
             # AFTER maintenance so the published checkpoint includes any
             # compaction/retention commits of this tick
             stats["catalog_version"] = retry_with_backoff(
-                lambda: self.catalog.publish(self.catalog_name),
-                attempts=self.retry_attempts,
+                lambda: self.catalog.publish(self.catalog_name)
             )
 
     def _ttl_tick(self) -> dict:
@@ -631,14 +611,14 @@ class CdcStream(WalTail):
         for _, p in vals[1:]:
             pred = pred & p
         rows = raw.filter(F.coalesce(pred, F.lit(False))).filter(
-            (F.col("op") != "D") & F.col(self.dedup_text_col).isNotNull()
+            (F.col("op") != "D") & F.col("text").isNotNull()
         )
         rows = dedup_last_writer_wins(rows, key=key, salted=self.salted_dedup)
         if self.transform is not None and self.transform_stage == "post":
             rows = self.transform(rows)
         docs = rows.select(
             F.xxhash64(*key).alias("__doc_id"),
-            F.col(self.dedup_text_col).alias("__text"),
+            F.col("text").alias("__text"),
             *key,
         )
         dedup_dir = os.path.join(self.state_dir, "dedup")
@@ -657,7 +637,7 @@ class CdcStream(WalTail):
                 .select("__doc_id", *key)
                 .dropDuplicates(["__doc_id"])
             )
-            table, text_col, kcols = self.table, self.dedup_text_col, list(key)
+            table, kcols = self.table, list(key)
 
             def corpus(ids_df):
                 keys_f = mapping.join(
@@ -665,9 +645,7 @@ class CdcStream(WalTail):
                 )
                 stored = table.read_for_key_frame(keys_f.select(*kcols))
                 return keys_f.join(
-                    stored.select(
-                        *kcols, F.col(text_col).alias("__text")
-                    ),
+                    stored.select(*kcols, F.col("text").alias("__text")),
                     on=kcols,
                 ).select("__doc_id", "__text")
         pairs = idx.ingest(
@@ -749,11 +727,11 @@ class Scd2Stream(WalTail):
     no-op row-wise. Both are probed in tests/test_streaming.py.
     """
 
+    source_name: ClassVar[str] = "wal:scd2"
     spark: SparkSession
     wal_dir: str
     table: LakeTable
     state_dir: str
-    source_name: str = "wal:scd2"
     time_col: str = "lsn"
     op_col: str = "op"
     delete_op: str = "D"
@@ -764,7 +742,6 @@ class Scd2Stream(WalTail):
     # (apply_scd2 is whole-batch windowed, so intra-batch order is
     # resolved by (time_col, tiebreak) regardless of segment grouping)
     adaptive_trigger_rows: int | None = None
-    retry_attempts: int = 3
     query: object = field(default=None, init=False)
 
     def __post_init__(self) -> None:
@@ -818,7 +795,6 @@ class Scd2Stream(WalTail):
                 carry_cols=self.carry_cols,
                 payload_cols=self.payload_cols,
             ),
-            attempts=self.retry_attempts,
         )
         stats = {"batch_id": batch_id, "skipped": False, **stats}
         self.commit_log.commit(self.source_name, batch_id, stats)

@@ -285,22 +285,22 @@ def test_cursor_pin_makes_expiry_safe_by_default(spark, tmp_path):
 
 
 def test_export_survives_snapshot_expiry_with_rebootstrap(spark, tmp_path):
-    """Snapshot expiry under a lagging UNPINNED cursor (pin_cursor=False
-    — the pre-pinning feed shape, or a pin dropped out-of-band): the
-    next export raises with the recovery spelled out; reset_cursor(0)
-    publishes a full-load window that needs NO retained history, and
-    both a current and a fresh consumer converge from it."""
-    import pytest
-
+    """Snapshot expiry under a lagging cursor whose pin was dropped
+    out-of-band: the next export raises with the recovery spelled out;
+    reset_cursor(0) publishes a full-load window that needs NO retained
+    history, and both a current and a fresh consumer converge from it."""
     src, dst = make_pair(spark, tmp_path)
     feed = str(tmp_path / "feed")
-    ex = ChangeFeedExporter(src, feed, table_name="t", pin_cursor=False)
+    ex = ChangeFeedExporter(src, feed, table_name="t")
     src.merge(spark.createDataFrame(rows(range(6)), SCHEMA))
     ex.export_once()
     replicate_available(spark, feed, dst, str(tmp_path / "state"))
 
     src.merge(spark.createDataFrame(rows(range(3), tag="x", t0=50), SCHEMA))
     src.merge(spark.createDataFrame(rows([6, 7], tag="y", t0=55), SCHEMA))
+    for ref in src.refs():
+        if ref.startswith("feed"):
+            src.drop_ref(ref)  # out-of-band pin drop
     src.expire_snapshots(keep_last=1)  # cursor's snapshot is now gone
 
     with pytest.raises(RuntimeError, match="reset_cursor"):

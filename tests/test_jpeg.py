@@ -120,8 +120,8 @@ def test_decode_media_meta_truncated_png_degrades(spark):
 
 def test_decode_media_meta_gif_and_bmp_headers(spark):
     """GIF logical-screen and BMP info-header dimensions decode
-    in-container (header-only, like PNG/JPEG); truncated prefixes
-    degrade to null meta rows."""
+    in-container (header-only, like PNG/JPEG); truncated prefixes and
+    non-INFOHEADER DIB headers degrade to null meta rows."""
     import struct
 
     from etl_spark.operators.multimodal import MEDIA_SCHEMA, decode_media_meta
@@ -132,11 +132,17 @@ def test_decode_media_meta_gif_and_bmp_headers(spark):
         + struct.pack("<Iii", 40, 640, -480)  # top-down: negative height
         + b"\x00" * 24
     )
+    # OS/2 BITMAPCOREHEADER (size 12, u16 dims): not decoded, null row
+    core = (
+        b"BM" + struct.pack("<IHHI", 26, 0, 0, 26)
+        + struct.pack("<IHHHH", 12, 640, 480, 1, 24)
+    )
     rows = [
         ("g0", "image", "image/gif", gif, (320, 200, 0, len(gif))),
         ("b0", "image", "image/bmp", bmp, (640, 480, 0, len(bmp))),
         ("g1", "image", "image/gif", b"GIF89a\x01", (0, 0, 0, 7)),
         ("b1", "image", "image/bmp", b"BM\x00\x00", (0, 0, 0, 4)),
+        ("b2", "image", "image/bmp", core, (640, 480, 0, len(core))),
     ]
     out = {
         r["asset_id"]: r
@@ -148,3 +154,6 @@ def test_decode_media_meta_gif_and_bmp_headers(spark):
     assert (out["b0"]["decoded_width"], out["b0"]["decoded_height"]) == (640, 480)
     assert out["g1"]["decoded_width"] is None
     assert out["b1"]["decoded_width"] is None
+    assert (out["b2"]["decoded_width"], out["b2"]["decoded_height"]) == (
+        None, None
+    )

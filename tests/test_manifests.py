@@ -1,6 +1,5 @@
 """Per-bucket content-addressed manifests: commit metadata is O(touched
-buckets), manifests are reused across snapshots, GC'd on expiry, and the
-legacy inline-files snapshot format still reads."""
+buckets), manifests are reused across snapshots and GC'd on expiry."""
 
 from __future__ import annotations
 
@@ -74,27 +73,6 @@ def test_expire_gcs_unreferenced_manifests(spark, tmp_path):
     }
     assert on_disk == live
     assert t.read().count() == 1
-
-
-def test_legacy_inline_files_snapshot_still_reads(spark, tmp_path):
-    t = make(spark, tmp_path / "t")
-    t.merge(spark.createDataFrame([("c1", 0, "a", "U")], OPS), op_col="op")
-    v = t.current_version()
-    # rewrite the snapshot in the pre-manifest format (inline `files`)
-    snap = t.snapshot(v)
-    path = t._snap_path(v)
-    with open(path) as fh:
-        d = json.load(fh)
-    d.pop("manifest_refs")
-    d["files"] = snap.files
-    os.remove(path)
-    with open(path, "w") as fh:
-        json.dump(d, fh)
-    t2 = LakeTable.load(spark, str(tmp_path / "t"))
-    assert [(r.conv_id, r.text) for r in t2.read().collect()] == [("c1", "a")]
-    # and the next commit upgrades it to the manifest-list format
-    t2.merge(spark.createDataFrame([("c2", 0, "b", "U")], OPS), op_col="op")
-    assert refs(t2, t2.current_version())
 
 
 def test_read_for_keys_opens_only_target_bucket_manifests(spark, tmp_path):

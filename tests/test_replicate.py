@@ -151,9 +151,7 @@ def test_direct_bootstrap_skips_the_json_wire_and_replays_as_noop(
 ):
     """Default bootstrap MERGEs the pinned snapshot read directly
     (parquet-native — no full-load JSONL segment in the feed) under the
-    same commit-log bookkeeping; a replayed tick applies 0 rows; the
-    legacy feed-mode bootstrap produces the identical replica state via
-    a seg- full-load window."""
+    same commit-log bookkeeping; a replayed tick applies 0 rows."""
     import os
 
     a = mk_table(spark, tmp_path, "a", [("c1", 0, "hi"), ("c2", 0, "yo")])
@@ -170,15 +168,6 @@ def test_direct_bootstrap_skips_the_json_wire_and_replays_as_noop(
 
     s2 = r.tick()  # replay: commit-log no-op, nothing re-merged
     assert s2["tables"]["a"]["rows_applied"] == 0
-
-    rep2 = Catalog.create(spark, str(tmp_path / "replica2"))
-    r2 = CatalogReplicator(
-        spark, cat, rep2, str(tmp_path / "work2"), bootstrap="feed"
-    )
-    r2.tick()
-    assert rows(rep2.read("a")) == rows(rep.read("a"))
-    feed2 = str(tmp_path / "work2" / "feed" / "a")
-    assert len([n for n in os.listdir(feed2) if n.startswith("seg-")]) == 1
 
 
 def test_mor_replica_backlog_compaction_folds_before_flip(spark, tmp_path):
