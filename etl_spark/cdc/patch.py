@@ -188,7 +188,7 @@ def resolve_patches(
     ]
     stored_cols = [c for c in snap.schema.fieldNames() if c in payload]
     stored = table.read_for_key_frame(
-        folded, buckets=buckets, broadcast=broadcast, distinct=False
+        folded, buckets=buckets, broadcast=broadcast
     ).select(*key, *stored_cols)
     if broadcast:
         # the semi-join bounds stored to <= one row per batch key, so the

@@ -399,7 +399,6 @@ class IncrementalAggView:
                 delta.select(*gb),
                 buckets=set(per_bucket),
                 broadcast=n_groups <= self.broadcast_threshold,
-                distinct=False,  # delta is one row per group already
             )
             # after the prune the state side is <= n_groups rows — ship it
             # broadcast too, so the combine never shuffles either side

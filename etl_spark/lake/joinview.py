@@ -560,12 +560,11 @@ class IncrementalJoinView:
                             aff, buckets=set(l_pb),
                             version=lv,
                             broadcast=n_aff <= self.broadcast_threshold,
-                            distinct=False, per_bucket=l_pb,
+                            per_bucket=l_pb,
                         )
                         rprobe2 = self.right.read_for_key_frame(
                             rkeys, buckets=set(r2_pb),
-                            version=rv, broadcast=small, distinct=False,
-                            per_bucket=r2_pb,
+                            version=rv, broadcast=small, per_bucket=r2_pb,
                         )
                         src = self._view_rows(lrows, rprobe2, broadcast=small)
                         if self.capture_plans:

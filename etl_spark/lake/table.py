@@ -44,6 +44,7 @@ import os
 import re
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 from typing import Any, Callable
 
@@ -1099,9 +1100,10 @@ class LakeTable:
         bucket key). The serving-path complement of the MERGE's bucket
         pruning: at a 4k-bucket 100 TB table a key lookup reads ~1/4000th
         of the files instead of scanning everything. The bucket of each
-        value is computed by a tiny Spark job on the literal values (the
-        engine's xxhash64 bucketing must match bit-for-bit, so it is never
-        re-implemented driver-side); the result still carries the exact
+        value comes from ``bucket_histogram`` over the literal values,
+        which Catalyst folds on the driver with no Spark job (the engine's
+        xxhash64 bucketing must match bit-for-bit, so it is never
+        re-implemented in Python); the result still carries the exact
         key filter, so collisions inside a bucket are filtered out."""
         # header-only snapshot first (buckets=set() skips every manifest):
         # the lookup needs bucketing config before it knows WHICH 1-2
@@ -1114,10 +1116,7 @@ class LakeTable:
         tuples = [v if isinstance(v, tuple) else (v,) for v in values]
         schema = T.StructType([head.schema[c] for c in cols])
         vals_df = self.spark.createDataFrame(tuples, schema)
-        buckets = {
-            r["__b"]
-            for r in vals_df.select(self._bucket_expr(head).alias("__b")).collect()
-        }
+        buckets = set(self.bucket_histogram(vals_df, version))
         snap = self.snapshot(version, buckets=buckets)
         entries = [f for f in snap.data_files if f["bucket"] in buckets]
         out = self._read_files(snap, entries, buckets=buckets)
@@ -1132,19 +1131,24 @@ class LakeTable:
     def bucket_histogram(
         self, df: DataFrame, version: int | None = None
     ) -> dict[int, int]:
-        """Per-bucket row counts of ``df`` under THIS table's bucket layout
-        (one small aggregation action — at most ``n_buckets`` rows reach the
-        driver). The result doubles as ``merge(per_bucket=...)``, so a
-        caller that needs the histogram anyway pays zero extra jobs for the
-        merge's own sizing pass."""
+        """Per-bucket row counts of ``df`` under THIS table's bucket layout.
+        A driver-resident frame (e.g. ``createDataFrame(pandas)``, whose
+        bucket projection Catalyst folds into a LocalRelation) is counted
+        from one collect that runs no Spark job; any other frame runs one
+        small aggregation (at most ``n_buckets`` rows reach the driver).
+        The result doubles as ``merge(per_bucket=...)``, so a caller that
+        needs the histogram anyway pays zero extra jobs for the merge's
+        own sizing pass."""
         head = self.snapshot(version, buckets=set())
         if head.n_buckets <= 0:
             raise ValueError("bucket_histogram requires a bucketed table")
+        bexpr = self._bucket_expr(head).alias("__b")
+        projected = df.select(bexpr)
+        if _is_local(projected):
+            return dict(Counter(r["__b"] for r in projected.collect()))
         return {
             r["__b"]: r["n"]
-            for r in df.groupBy(self._bucket_expr(head).alias("__b"))
-            .agg(F.count("*").alias("n"))
-            .collect()
+            for r in df.groupBy(bexpr).agg(F.count("*").alias("n")).collect()
         }
 
     def read_for_key_frame(
@@ -1153,7 +1157,6 @@ class LakeTable:
         buckets: set[int] | None = None,
         version: int | None = None,
         broadcast: bool = True,
-        distinct: bool = True,
         per_bucket: dict[int, int] | None = None,
     ) -> DataFrame:
         """Distributed companion of ``read_for_keys``: stored rows whose
@@ -1163,6 +1166,8 @@ class LakeTable:
         restriction is a left-semi join, broadcast while the key frame is
         batch-sized so the bucket scan stays map-side and shuffle-free —
         the read-before-write shape for patch/partial-update resolution.
+        Duplicate keys in the frame do not change the result (a semi join
+        emits each stored row at most once), so the frame is not deduped.
 
         ``per_bucket`` (a key-frame bucket histogram — e.g.
         ``bucket_histogram``'s dict, which many callers already hold
@@ -1187,8 +1192,6 @@ class LakeTable:
             )
         snap = self.snapshot(version, buckets=buckets)
         k = keys.select(*snap.key)
-        if distinct:  # skip for key-unique frames (e.g. a fold output):
-            k = k.dropDuplicates(snap.key)  # saves one batch-sized shuffle
         scoped = {
             b: n for b, n in (per_bucket or {}).items() if b in buckets
         }
@@ -3704,6 +3707,13 @@ def maintenance_only(table: LakeTable, last: int, cur: int) -> bool:
         )
     except FileNotFoundError:
         return False
+
+
+def _is_local(df: DataFrame) -> bool:
+    """True when Catalyst folds ``df`` into a driver-side LocalRelation,
+    so collecting it runs no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.nodeName() == "LocalRelation"
 
 
 def bucket_of(cols: list[str], n_buckets: int) -> Column:

@@ -2848,9 +2848,12 @@ def q_multimodal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 samples = np.frombuffer(pcm, dtype="<i2")
                 ids.append(did); kinds.append("audio")
                 blobs.append(encode_wav(samples, 1000))
+                # one COM segment holds at most 65533 bytes: a longer
+                # document is clamped, not a ValueError for the batch
+                com = data[:0xFFFD]
                 ids.append(did); kinds.append("jpeg")
                 blobs.append(
-                    jpeg_header_fixture(len(data) + 1, 1, comment=data)
+                    jpeg_header_fixture(len(com) + 1, 1, comment=com)
                 )
             yield pd.DataFrame({"doc_id": ids, "kind": kinds, "data": blobs})
 
@@ -2880,7 +2883,7 @@ SELECT doc_id,
        CAST(strlen(text) + 1 AS INTEGER) AS png_width,
        1 AS png_height,
        CAST(CEIL(strlen(text) / 2.0) AS INTEGER) AS wav_duration_ms,
-       CAST(strlen(text) + 1 AS INTEGER) AS jpeg_width,
+       CAST(LEAST(strlen(text), 65533) + 1 AS INTEGER) AS jpeg_width,
        1 AS jpeg_height
 FROM documents
 """

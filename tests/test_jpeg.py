@@ -157,3 +157,28 @@ def test_decode_media_meta_gif_and_bmp_headers(spark):
     assert (out["b2"]["decoded_width"], out["b2"]["decoded_height"]) == (
         None, None
     )
+
+
+def test_multimodal_roundtrip_clamps_over_long_comment(spark, tmp_path):
+    """A document past one COM segment (65533 bytes) is clamped into the
+    JPEG fixture instead of raising, and the DuckDB oracle agrees."""
+    import duckdb
+    import pandas as pd
+
+    from etl_spark.queries import ORACLE_SQL, q_multimodal_roundtrip
+
+    docs = pd.DataFrame({"doc_id": [1, 2], "text": ["x" * 70_000, "short"]})
+    path = tmp_path / "documents.parquet"
+    docs.to_parquet(path)
+    got = {
+        r["doc_id"]: r.asDict()
+        for r in q_multimodal_roundtrip(spark, str(tmp_path)).collect()
+    }
+    assert got[1]["jpeg_width"] == 65534
+    assert got[1]["png_width"] == 70_001
+    assert got[2]["jpeg_width"] == 6
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = con.execute(ORACLE_SQL["multimodal_roundtrip"]).fetchdf()
+    for r in want.to_dict("records"):
+        assert got[r["doc_id"]] == {k: int(v) for k, v in r.items()}

@@ -515,7 +515,7 @@ def test_patch_resolution_plan_is_broadcast_only(spark, tmp_path):
         # contract 1: the stored-row read never shuffles the table side —
         # the key restriction is a broadcast semi join, zero shuffle
         # exchanges anywhere in that subtree
-        stored = table.read_for_key_frame(folded, distinct=False)
+        stored = table.read_for_key_frame(folded)
         splan = stored._jdf.queryExecution().executedPlan().toString()
         # text below the cache boundary is the fold's ALREADY-MATERIALIZED
         # plan (its own groupBy shuffle) — only the live plan above it counts

@@ -167,7 +167,7 @@ def test_key_frame_grouped_semi_join_past_guard(spark, tmp_path, monkeypatch):
     # guard=8: every bucket fits a group -> pure per-group broadcast plan
     monkeypatch.setattr(table_mod, "_MOR_BROADCAST_ROWS", 8)
     df = t.read_for_key_frame(
-        keys, broadcast=False, distinct=False, per_bucket=pb
+        keys, broadcast=False, per_bucket=pb
     )
     got = sorted(tuple(r) for r in df.collect())
     assert got == want
@@ -180,7 +180,7 @@ def test_key_frame_grouped_semi_join_past_guard(spark, tmp_path, monkeypatch):
     got2 = sorted(
         tuple(r)
         for r in t.read_for_key_frame(
-            keys, broadcast=False, distinct=False, per_bucket=pb
+            keys, broadcast=False, per_bucket=pb
         ).collect()
     )
     assert got2 == want
@@ -242,7 +242,7 @@ def test_key_frame_widened_buckets_not_lost(spark, tmp_path, monkeypatch):
     short = dict(pb)
     short.pop(next(iter(short)))
     df = t.read_for_key_frame(
-        keys, broadcast=False, distinct=False,
+        keys, broadcast=False,
         buckets=all_buckets, per_bucket=short,
     )
     got = sorted(tuple(r) for r in df.collect())
@@ -322,7 +322,7 @@ def test_fuzz_grouped_reads_equal_broadcast_reads(
     got = sorted(
         tuple(r)
         for r in t.read_for_key_frame(
-            keys, broadcast=False, distinct=False, per_bucket=pb
+            keys, broadcast=False, per_bucket=pb
         ).collect()
     )
     assert got == want
