@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_spark.lake.table import LakeTable, _BUCKET_COL
+from etl_spark.lake.table import LakeTable
 
 SCD2_ENGINE_COLS = ["valid_from", "valid_to", "is_current", "version", "last_seen"]
 
@@ -177,14 +177,10 @@ def apply_scd2(
         *bkey, time_col, *[_ev_col(c) for c in payload + carry], *tb,
         is_del.alias("__del"),
     )
-    src = src.withColumn(_BUCKET_COL, table._bucket_expr(snap))
     src.persist()
     to_unpersist = [src]
     try:
-        per_bucket = {
-            r[_BUCKET_COL]: r["n"]
-            for r in src.groupBy(_BUCKET_COL).agg(F.count("*").alias("n")).collect()
-        }
+        per_bucket = table.bucket_histogram(src, snap.version)
         if not per_bucket:
             return None, {"late_rows": 0, "events_applied": 0,
                           "versions_written": 0, "source_rows": 0}
@@ -193,11 +189,12 @@ def apply_scd2(
         # anchor rows (max version per key — last_seen is non-NULL on
         # exactly that row, current or delete-closed) of affected keys,
         # from affected buckets only
-        entries = [f for f in snap.files if f["bucket"] in per_bucket]
-        cur = table._read_files(snap, entries).filter(
+        cur = table._read_buckets(set(per_bucket), snap=snap).filter(
             F.col("last_seen").isNotNull()
         )
-        keys = src.select(*bkey).dropDuplicates(bkey)
+        # no dedup: a left-semi join's output does not depend on
+        # duplicate build keys
+        keys = src.select(*bkey)
         if src_rows <= broadcast_threshold:
             keys = F.broadcast(keys)
         # persisted: the current-row set feeds the late guard AND the
@@ -230,7 +227,7 @@ def apply_scd2(
 
         # only keys with a surviving event get their tail rebuilt (a key
         # whose events were ALL late must not be rewritten — replay no-op)
-        live_keys = ev.select(*bkey).dropDuplicates(bkey)
+        live_keys = ev.select(*bkey)
         if src_rows <= broadcast_threshold:
             live_keys = F.broadcast(live_keys)
         cur = cur.join(live_keys, on=bkey, how="left_semi")

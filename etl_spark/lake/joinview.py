@@ -310,13 +310,12 @@ class IncrementalJoinView:
             buckets = set(self.index.bucket_histogram(fkframe))
         if not buckets:
             return self.spark.createDataFrame([], self.index.schema)
-        snap = self.index.snapshot(buckets=buckets)
-        entries = [e for e in snap.data_files if e["bucket"] in buckets]
-        rows = self.index._read_files(snap, entries, buckets=buckets)
-        k = fkframe.dropDuplicates(self.on)
-        if broadcast:
-            k = F.broadcast(k)
-        return rows.join(k, on=self.on, how="left_semi")
+        # no dedup: a left-semi join's output does not depend on
+        # duplicate build keys
+        k = F.broadcast(fkframe) if broadcast else fkframe
+        return self.index._read_buckets(buckets).join(
+            k, on=self.on, how="left_semi"
+        )
 
     # -------------------------------------------------------------- refresh
     def refresh(self) -> dict[str, Any]:

@@ -80,14 +80,6 @@ def bucket_fingerprints(
     )
 
 
-def _read_buckets(table: LakeTable, version: int | None, buckets: set[int]) -> DataFrame:
-    snap = table.snapshot(version, buckets=buckets)
-    entries = [e for e in snap.data_files if e["bucket"] in buckets]
-    # explicit scope: a bucket whose only content is patch deltas has no
-    # data entries, but its folded rows must still be fingerprinted
-    return table._read_files(snap, entries, buckets=buckets)
-
-
 def _state_fp(schema: T.StructType, n_buckets: int, bucket_by: list[str]) -> str:
     """Hash of everything the stored triples depend on: the COLUMN SET
     (null-flagged row hashes change when a column appears) and the
@@ -387,10 +379,10 @@ def diff_tables(
         )
         return spark.createDataFrame([], empty), info
 
-    p_rows = _read_buckets(primary, primary_version, divergent)
+    p_rows = primary._read_buckets(divergent, primary_version)
     if layouts_equal:
         r_rows = align_to_schema(
-            _read_buckets(replica, replica_version, divergent), schema
+            replica._read_buckets(divergent, replica_version), schema
         )
     else:
         if r_full is None:  # unreachable today: fps imply equal layouts

@@ -72,6 +72,14 @@ def get_session(
         # 1000-executor cluster the same reasoning holds per executor.
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Lake reads hand spark.read.parquet the exact file list from the
+        # table manifest; past the stock threshold of 32 paths Spark would
+        # launch a file-listing JOB (one task per path) to stat files the
+        # manifest already names. List on the driver instead, always.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -259,6 +259,35 @@ def test_selective_compact_rebases_over_disjoint_winner(spark, tmp_path):
     assert [s.op for s in t.history()][-2].startswith("merge")
 
 
+def test_full_compact_rebases_over_metadata_only_commit(spark, tmp_path):
+    """Full compaction is the selection of every occupied bucket, so it
+    takes the same validate-and-rebase commit: a concurrent ``tag``
+    changes no bucket's entries, and the compact re-commits on top."""
+    t = make(spark, tmp_path / "t")
+    seed(spark, t)
+    t.merge(
+        spark.createDataFrame([("c000", 0, "new", "U")], OP_SCHEMA),
+        op_col="op", mode="mor",
+    )
+    writer = LakeTable(spark, t.path)
+    _inject_before_commit(t, lambda: writer.tag("concurrent"))
+    before = rows(t.read())
+    occupied = len({f["bucket"] for f in t.snapshot().files})
+    got = t.compact()
+    assert got is not None
+    assert got.op == f"compact({occupied}/{N_BUCKETS} buckets)"
+    assert rows(t.read()) == before
+    assert not t.snapshot().delete_source_files
+    assert [s.op for s in t.history()][-2] == "concurrent"
+
+
+def test_compact_of_empty_table_commits_nothing(spark, tmp_path):
+    t = make(spark, tmp_path / "t")
+    v = t.current_version()
+    assert t.compact() is None
+    assert t.current_version() == v
+
+
 def test_selective_compact_raises_on_same_bucket_race(spark, tmp_path):
     """A concurrent commit INTO a selected bucket is a genuine conflict:
     the rewrite is stale, so the compact raises instead of dropping the

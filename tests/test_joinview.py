@@ -512,6 +512,24 @@ def test_right_delta_plan_is_shuffle_free(spark, tmp_path):
     assert_converged(view, "left")
 
 
+def test_index_probe_over_local_keys_does_not_shuffle(spark, tmp_path):
+    """The index probe restricts by a broadcast semi join, whose output
+    does not depend on duplicate build keys — so a driver-resident key
+    frame with repeats goes in as is, with no dedup shuffle in front."""
+    left, right = make_tables(spark, tmp_path, n_left=24, n_right=8)
+    view = IncrementalJoinView(
+        spark, str(tmp_path / "v"), left, right, on=["cust"],
+        right_prefix="d_", n_buckets=4,
+    )
+    view.refresh()
+    rkeys = spark.createDataFrame([(3,), (3,), (5,)], "cid long")
+    probe = view._probe_index(rkeys, broadcast=True)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning" not in plan
+    got = sorted(tuple(r) for r in probe.select("cust", "oid").collect())
+    assert got == [(c, o) for c in (3, 5) for o in range(24) if o % 8 == c]
+
+
 def test_mor_merge_mode_converges_and_compacts(spark, tmp_path):
     """merge_mode='mor': refreshes commit O(delta) bytes (delta/eqdel
     files accrue on the view), reads still converge through the gate,

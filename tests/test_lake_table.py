@@ -974,7 +974,7 @@ def test_vacuum_removes_orphans_keeps_referenced(spark, tmp_path):
     df = spark.createDataFrame([("c9", 9, "orphan")], SCHEMA).withColumn(
         "__bucket", F.lit(0)
     )
-    t._write_data_files(99, df, 1)
+    t._write_data_files(t.snapshot(), df, n_buckets=1)
     n_parquet = sum(
         len([n for n in names if n.endswith(".parquet")])
         for _, _, names in _os.walk(_os.path.join(t.path, "data"))

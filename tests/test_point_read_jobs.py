@@ -108,3 +108,21 @@ def test_duplicate_keys_read_like_their_deduped_twin(spark, tmp_path):
         once = t.read_for_key_frame(_keys(spark)).collect()
         assert sorted(dup) == sorted(once)
         assert len(dup) == len(set(dup))
+
+
+def test_wide_table_read_builds_without_a_listing_job(spark, tmp_path):
+    """The manifest names every file a read opens; past Spark's stock
+    parallel-listing threshold (32 paths) building the DataFrame must
+    still stat them on the driver, not in a listing job."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, key=KEY, n_buckets=40,
+        bucket_by=["conv_id"],
+    )
+    t.append(
+        spark.createDataFrame(
+            [(f"c{i}", 0, f"t{i}") for i in range(400)], SCHEMA
+        )
+    )
+    assert len(t.snapshot().data_files) >= 33
+    _df, n = _jobs(spark, t.read)
+    assert n == 0

@@ -103,9 +103,7 @@ def test_diff_reads_only_divergent_buckets(spark, tmp_path):
     )
     assert got_b == b
     # the pruned diff read plans only that bucket's files on the primary
-    from etl_spark.lake.sync import _read_buckets
-
-    files = _read_buckets(p, None, {b}).inputFiles()
+    files = p._read_buckets({b}).inputFiles()
     assert files and all(f"__bucket={b}/" in f for f in files)
 
 
