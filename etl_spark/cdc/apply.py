@@ -130,6 +130,155 @@ def default_patch_validators(
     return vals
 
 
+def _select_validators(
+    validators: Sequence[tuple[str, Column]] | None,
+    columns: Sequence[str],
+    key: Sequence[str],
+    op_col: str,
+    patch_touched_col: str | None,
+) -> list[tuple[str, Column]]:
+    """The batch's validator list: the caller's, else the patch-aware
+    defaults for a patch stream (payload = the non-key, non-engine
+    columns of the frame), else the full-row defaults."""
+    if validators is not None:
+        return list(validators)
+    if patch_touched_col is None:
+        return default_validators(op_col)
+    payload_cols = [
+        c for c in columns
+        if c not in key and c not in DEFAULT_ORDER
+        and c not in META_COLS and c not in (op_col, patch_touched_col)
+    ]
+    return default_patch_validators(op_col, patch_touched_col, payload_cols)
+
+
+def _fold_validators(vals: Sequence[tuple[str, Column]]) -> tuple[Column, Column]:
+    """(is_valid, error label) of a non-empty validator list. Both are
+    NULL-safe: under three-valued logic a predicate that evaluates to NULL
+    (e.g. op IS NULL through isin) is a failure — without the coalesce
+    such rows pass neither filter nor ~filter and vanish with no
+    dead-letter record and no accounting. The label names the first
+    failing validator."""
+    pred = vals[0][1]
+    for _, p in vals[1:]:
+        pred = pred & p
+    err = F.coalesce(
+        *[F.when(~F.coalesce(p, F.lit(False)), F.lit(name)) for name, p in vals],
+        F.lit("unknown"),
+    )
+    return F.coalesce(pred, F.lit(False)), err
+
+
+def _account(
+    df: DataFrame,
+    bucket: Column,
+    valid_pred: Column,
+    dest: Column | None = None,
+) -> dict:
+    """ALL batch accounting in ONE aggregation pass: per-(source partition
+    x target bucket) valid/failed counts + applied-LSN range via
+    conditional aggregation, grouped per destination too when ``dest`` is
+    given. One collect replaces separate dead-letter count, per-partition
+    stats, and the merge's own per-bucket count — per-micro-batch driver
+    actions (scheduling, planning, codegen) are the serial floor that caps
+    streaming throughput and scaling, so each extra job per batch is real
+    money.
+
+    Returns ``{dest value (None without dest): (per_bucket valid-row
+    histogram, per-partition rows)}``; a partition row carries
+    ``source_partition``, ``rows_in``, ``rows_failed``, ``low_lsn`` and
+    ``high_lsn``."""
+    group = [
+        F.col("source_partition")
+        if "source_partition" in df.columns
+        else F.lit(-1).alias("source_partition"),
+        bucket.alias("_bucket"),
+    ]
+    if dest is not None:
+        group.insert(0, dest.alias("_dest"))
+    lsn = F.col("lsn") if "lsn" in df.columns else F.lit(None).cast("long")
+    cells = (
+        df.groupBy(*group)
+        .agg(
+            F.count(F.when(valid_pred, 1)).alias("rows_in"),
+            F.count(F.when(~valid_pred, 1)).alias("rows_failed"),
+            F.min(F.when(valid_pred, lsn)).alias("low_lsn"),
+            F.max(F.when(valid_pred, lsn)).alias("high_lsn"),
+        )
+        .collect()
+    )
+    # roll the (partition x bucket) cells up both ways
+    out: dict = {}
+    for c in cells:
+        per_bucket, parts = out.setdefault(
+            c["_dest"] if dest is not None else None, ({}, {})
+        )
+        if c["rows_in"]:
+            per_bucket[c["_bucket"]] = per_bucket.get(c["_bucket"], 0) + c["rows_in"]
+        p = parts.setdefault(
+            c["source_partition"],
+            {"source_partition": c["source_partition"], "rows_in": 0,
+             "rows_failed": 0, "low_lsn": None, "high_lsn": None},
+        )
+        p["rows_in"] += c["rows_in"]
+        p["rows_failed"] += c["rows_failed"]
+        for k, fn in (("low_lsn", min), ("high_lsn", max)):
+            if c[k] is not None:
+                p[k] = c[k] if p[k] is None else fn(p[k], c[k])
+    return {d: (pb, list(parts.values())) for d, (pb, parts) in out.items()}
+
+
+def _dead_letter(
+    df: DataFrame, valid_pred: Column, err: Column, dir_: str, batch_id: int
+) -> None:
+    """Write the batch's failed rows with their error label. One subdir
+    per batch, overwritten: a batch retry (merge failure after this
+    write) re-writes the same rows instead of appending duplicates —
+    dead-letter output is idempotent like the merge itself."""
+    df.filter(~valid_pred).withColumn("error", err).withColumn(
+        "batch_id", F.lit(batch_id).cast("long")
+    ).write.mode("overwrite").parquet(os.path.join(dir_, f"batch={batch_id}"))
+
+
+def _checkpoint(
+    spark: SparkSession,
+    stats: dict,
+    t0: float,
+    *,
+    source: str,
+    batch_id: int,
+    commit_log: CommitLog | None,
+    metrics: MetricsTable | None,
+    metric_rows: Sequence[dict] = (),
+    watermark_store: WatermarkStore | None = None,
+    applied_parts: Sequence[dict] | None = None,
+) -> dict:
+    """The batch epilogue, in checkpoint-after-commit order (the
+    reference's, /root/reference/v2/etl.go:196-207): advance the
+    watermarks to the high LSN per partition of ``applied_parts`` (the
+    partition rows of an applied batch; None skips the advance), write the
+    (source, batch_id) commit marker, stamp ``latency_ms`` and record the
+    metric rows (each gets the batch id, the latency and, unless it sets
+    one, a NULL ``rows_applied``: applied counts exist only at batch grain,
+    the dedup crosses partitions). Returns ``stats``."""
+    if watermark_store is not None and applied_parts is not None:
+        high: dict[int, int] = {}
+        for r in applied_parts:
+            if r["high_lsn"] is not None:
+                sp = r["source_partition"]
+                high[sp] = max(high.get(sp, r["high_lsn"]), r["high_lsn"])
+        watermark_store.advance(high)
+    if commit_log is not None:
+        commit_log.commit(source, batch_id, stats)
+    stats["latency_ms"] = int((time.time() - t0) * 1000)
+    if metrics is not None and metric_rows:
+        batch = {"batch_id": batch_id, "latency_ms": stats["latency_ms"]}
+        metrics.record(
+            spark, [{"rows_applied": None, **r, **batch} for r in metric_rows]
+        )
+    return stats
+
+
 def apply_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -256,270 +405,160 @@ def apply_batch(
     # the merge write. Re-scanning parquet is cheaper and scales with
     # cores, while the columnar cache build is allocation-bound and does
     # not; and at 10^10-event scale a cached batch wouldn't fit anyway.
-    try:
-        stats: dict = {"batch_id": batch_id, "source": source, "skipped": False}
-
-        if validators is not None:
-            vals = list(validators)
-        elif patch_touched_col is not None:
-            payload_cols = [
-                c for c in df.columns
-                if c not in table.key and c not in DEFAULT_ORDER
-                and c not in META_COLS and c not in (op_col, patch_touched_col)
-            ]
-            vals = default_patch_validators(
-                op_col, patch_touched_col, payload_cols
-            )
-        else:
-            vals = default_validators(op_col)
-        if vals:
-            valid_pred = vals[0][1]
-            for _, p in vals[1:]:
-                valid_pred = valid_pred & p
-            # three-valued logic totality: a predicate that evaluates to
-            # NULL (e.g. op IS NULL through isin) must land in the FAILED
-            # split — without the coalesce such rows pass neither filter
-            # nor ~filter and vanish from the batch with no dead-letter
-            # record and no accounting
-            valid_pred = F.coalesce(valid_pred, F.lit(False))
-            valid = df.filter(valid_pred)
-        else:
-            valid_pred = F.lit(True)
-            valid = df
-
-        # ALL batch accounting in ONE aggregation pass: per-(source
-        # partition x target bucket) valid/failed counts + applied-LSN
-        # range via conditional aggregation. One collect replaces separate
-        # dead-letter count, per-partition stats, and the merge's own
-        # per-bucket count — per-micro-batch driver actions (scheduling,
-        # planning, codegen) are the serial floor that caps streaming
-        # throughput and scaling, so each extra job per batch is real money.
-        # header-only snapshot: only bucket_by/n_buckets/schema are needed
-        # here — loading every per-bucket manifest would be pure driver
-        # overhead on the per-batch serial floor
-        tsnap = table.snapshot(buckets=set())
-        group = [
-            F.col("source_partition")
-            if "source_partition" in stats_df.columns
-            else F.lit(-1).alias("source_partition"),
-            bucket_of(tsnap.bucket_by, tsnap.n_buckets).alias("_bucket"),
-        ]
-        lsn = F.col("lsn") if "lsn" in stats_df.columns else F.lit(None).cast("long")
-        cells = (
-            stats_df.groupBy(*group)
-            .agg(
-                F.count(F.when(valid_pred, 1)).alias("rows_in"),
-                F.count(F.when(~valid_pred, 1)).alias("rows_failed"),
-                F.min(F.when(valid_pred, lsn)).alias("low_lsn"),
-                F.max(F.when(valid_pred, lsn)).alias("high_lsn"),
-            )
-            .collect()
-        )
-        # roll the (partition x bucket) cells up both ways
-        per_bucket: dict[int, int] = {}
-        parts: dict[int, dict] = {}
-        for c in cells:
-            if c["rows_in"]:
-                per_bucket[c["_bucket"]] = per_bucket.get(c["_bucket"], 0) + c["rows_in"]
-            p = parts.setdefault(
-                c["source_partition"],
-                {"source_partition": c["source_partition"], "rows_in": 0,
-                 "rows_failed": 0, "low_lsn": None, "high_lsn": None},
-            )
-            p["rows_in"] += c["rows_in"]
-            p["rows_failed"] += c["rows_failed"]
-            for k, fn in (("low_lsn", min), ("high_lsn", max)):
-                if c[k] is not None:
-                    p[k] = c[k] if p[k] is None else fn(p[k], c[k])
-        part_rows = list(parts.values())
+    stats: dict = {"batch_id": batch_id, "source": source, "skipped": False}
+    # header-only snapshot: only key/bucket_by/n_buckets/schema are needed
+    # here — loading every per-bucket manifest would be pure driver
+    # overhead on the per-batch serial floor
+    tsnap = table.snapshot(buckets=set())
+    vals = _select_validators(
+        validators, df.columns, tsnap.key, op_col, patch_touched_col
+    )
+    if vals:
+        valid_pred, err = _fold_validators(vals)
+        valid = df.filter(valid_pred)
+    else:
+        valid_pred = F.lit(True)
+        valid = df
+    per_bucket, part_rows = _account(
+        stats_df, bucket_of(tsnap.bucket_by, tsnap.n_buckets), valid_pred
+    ).get(None, ({}, []))
+    if vals:
         rows_failed = sum(r["rows_failed"] for r in part_rows)
-        if vals and dead_letter_dir is not None and rows_failed:
-            # NULL-safe labels: a NULL validator verdict is a failure
-            err = F.coalesce(
-                *[
-                    F.when(~F.coalesce(p, F.lit(False)), F.lit(name))
-                    for name, p in vals
-                ],
-                F.lit("unknown"),
-            )
-            # one subdir per batch, overwritten: a batch retry (merge
-            # failure after this write) re-writes the same rows instead of
-            # appending duplicates — dead-letter output is idempotent like
-            # the merge itself
-            stats_df.filter(~valid_pred).withColumn("error", err).withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ).write.mode("overwrite").parquet(
-                os.path.join(dead_letter_dir, f"batch={batch_id}")
-            )
-        if vals:
-            stats["rows_failed"] = rows_failed
-        rows_in = sum(r["rows_in"] for r in part_rows)
-        stats["rows_in"] = rows_in
+        stats["rows_failed"] = rows_failed
+        if dead_letter_dir is not None and rows_failed:
+            _dead_letter(stats_df, valid_pred, err, dead_letter_dir, batch_id)
+    rows_in = sum(r["rows_in"] for r in part_rows)
+    stats["rows_in"] = rows_in
 
-        def _record_metrics() -> None:
-            if metrics is None or not part_rows:
-                return
-            metrics.record(
-                spark,
-                [
-                    {
-                        "source": source,
-                        "batch_id": batch_id,
-                        "source_partition": r["source_partition"],
-                        "rows_in": r["rows_in"],
-                        # Applied counts exist only at batch grain (dedup
-                        # crosses partitions); a per-partition number here
-                        # would be the pre-dedup rows_in mislabeled.
-                        "rows_applied": None,
-                        "rows_failed": r["rows_failed"],
-                        "low_lsn": r["low_lsn"],
-                        "high_lsn": r["high_lsn"],
-                        "latency_ms": stats["latency_ms"],
-                    }
-                    for r in part_rows
-                ],
-            )
+    def _finish(applied: bool) -> dict:
+        # an all-rows-failed batch is the spike monitoring most needs to
+        # see — its per-partition rows_failed are recorded too
+        return _checkpoint(
+            spark, stats, t0, source=source, batch_id=batch_id,
+            commit_log=commit_log, metrics=metrics,
+            metric_rows=[{"source": source, **r} for r in part_rows],
+            watermark_store=watermark_store,
+            applied_parts=part_rows if applied else None,
+        )
 
-        if rows_in == 0:
-            stats["rows_applied"] = 0
-            if commit_log is not None:
-                commit_log.commit(source, batch_id, stats)
-            # an all-rows-failed batch is the spike monitoring most needs
-            # to see — record per-partition rows_failed before returning
-            stats["latency_ms"] = int((time.time() - t0) * 1000)
-            _record_metrics()
-            return stats
+    if rows_in == 0:
+        stats["rows_applied"] = 0
+        return _finish(applied=False)
 
-        # guard order columns must survive into the merge (and hence the
-        # table schema) — the guard compares the STORED order of the
-        # current row/tombstone against the incoming event's
-        keep = set(merge_lww_by or ())
-        fold_cache = None
-        patch_delta = False
-        if patch_touched_col is not None:
-            from etl_spark.cdc.patch import (
-                fold_patches,
-                folded_to_patch_rows,
-                resolve_patches,
-            )
+    # guard order columns must survive into the merge (and hence the
+    # table schema) — the guard compares the STORED order of the
+    # current row/tombstone against the incoming event's
+    keep = set(merge_lww_by or ())
+    fold_cache = None
+    patch_delta = False
+    if patch_touched_col is not None:
+        from etl_spark.cdc.patch import (
+            fold_patches,
+            folded_to_patch_rows,
+            resolve_patches,
+        )
 
-            order_cols = [c for c in DEFAULT_ORDER if c in valid.columns]
-            # non-order meta would otherwise be folded as payload wrappers
-            fold_src = valid.drop(
-                *[c for c in ("_seq", "batch_id") if c in valid.columns]
-            )
-            fold_cache = fold_patches(
-                fold_src, key=table.key, order_by=order_cols,
-                op_col=op_col, touched_col=patch_touched_col,
-            ).persist()
-            if merge_mode == "mor_patch":
-                # deferred resolution: the fold commits AS patch deltas —
-                # no stored-row read per batch, the read gate folds
-                # (post_transform incompatibility already rejected at the
-                # top-of-function precondition checks)
-                patch_delta = True
-                merge_src = folded_to_patch_rows(
-                    fold_cache, key=table.key, op_col=op_col,
-                    touched_col=patch_touched_col,
-                    extra_set_cols=[
-                        c for c in order_cols
-                        if c in tsnap.schema.fieldNames()
-                    ],
-                )
-            else:
-                deduped = resolve_patches(
-                    table, fold_cache, op_col=op_col,
-                    buckets=set(per_bucket), broadcast=rows_in <= 200_000,
-                )
-                if post_transform:
-                    deduped = transform(deduped)
-                merge_src = deduped.drop(*[
+        order_cols = [c for c in DEFAULT_ORDER if c in valid.columns]
+        # non-order meta would otherwise be folded as payload wrappers
+        fold_src = valid.drop(
+            *[c for c in ("_seq", "batch_id") if c in valid.columns]
+        )
+        fold_cache = fold_patches(
+            fold_src, key=table.key, order_by=order_cols,
+            op_col=op_col, touched_col=patch_touched_col,
+        ).persist()
+        if merge_mode == "mor_patch":
+            # deferred resolution: the fold commits AS patch deltas —
+            # no stored-row read per batch, the read gate folds
+            # (post_transform incompatibility already rejected at the
+            # top-of-function precondition checks)
+            patch_delta = True
+            merge_src = folded_to_patch_rows(
+                fold_cache, key=table.key, op_col=op_col,
+                touched_col=patch_touched_col,
+                extra_set_cols=[
                     c for c in order_cols
-                    if c not in keep and c not in tsnap.schema.fieldNames()
-                ])
+                    if c in tsnap.schema.fieldNames()
+                ],
+            )
         else:
-            deduped = dedup_last_writer_wins(
-                valid, key=table.key, salted=salted_dedup
+            deduped = resolve_patches(
+                table, fold_cache, op_col=op_col,
+                buckets=set(per_bucket), broadcast=rows_in <= 200_000,
             )
             if post_transform:
                 deduped = transform(deduped)
-            merge_src = deduped.drop(
-                *[c for c in META_COLS if c in deduped.columns and c not in keep]
-            )
-        try:
-            if patch_delta:
-                snap, merge_stats = table.commit_patches(
-                    merge_src, touched_col=patch_touched_col,
-                    op_col=op_col, per_bucket=per_bucket,
-                )
-            else:
-                if skip_unchanged:
-                    # Change detection (see LakeTable.changed_only): drop
-                    # state-no-op rows BEFORE the merge so all-unchanged
-                    # buckets leave the affected set. The stats pass's
-                    # per_bucket counts are pre-filter, so the merge must
-                    # recount — one extra driver action per batch, paid
-                    # only when the caller opts in (full-row-image
-                    # upstreams where most updates are no-ops).
-                    merge_src = table.changed_only(
-                        merge_src, op_col=op_col,
-                        buckets=set(per_bucket),
-                        broadcast=rows_in <= 200_000,
-                        # the stats pass's histogram arms the jumbo
-                        # bucket-group fallback in read_for_key_frame
-                        per_bucket=per_bucket,
-                        # guarded tables: an absent-key delete must still
-                        # write its tombstone or a later stale upsert
-                        # resurrects the row — never elide it there
-                        drop_absent_deletes=not merge_lww_by,
-                    )
-                snap, merge_stats = table.merge(
-                    merge_src, op_col=op_col,
-                    per_bucket=None if skip_unchanged else per_bucket,
-                    lww_by=list(merge_lww_by) if merge_lww_by else None,
-                    mode=merge_mode,
-                    # cached key-unique fold: the merge's anti-join keys
-                    # come from it directly instead of re-executing the
-                    # resolution subtree (one fewer bucket scan per batch)
-                    source_keys=None if skip_unchanged else fold_cache,
-                )
-                if skip_unchanged:
-                    merge_stats = dict(merge_stats)
-                    merge_stats["rows_unchanged_skipped"] = (
-                        # pre-dedup valid rows minus post-filter source
-                        # rows over-counts by in-batch duplicates; still
-                        # the honest upper-bound signal without an extra
-                        # pre-filter count action
-                        rows_in - merge_stats.get("source_rows", 0)
-                    )
-        finally:
-            if fold_cache is not None:
-                fold_cache.unpersist()
-        stats.update(merge_stats)
-        # Post-dedup count observed on the merge-write job — NOT the
-        # pre-dedup per_bucket sum (in-batch duplicates don't count as
-        # applied rows).
-        stats["rows_applied"] = merge_stats.get(
-            "rows_applied", merge_stats.get("source_rows", 0)
+            merge_src = deduped.drop(*[
+                c for c in order_cols
+                if c not in keep and c not in tsnap.schema.fieldNames()
+            ])
+    else:
+        deduped = dedup_last_writer_wins(
+            valid, key=table.key, salted=salted_dedup
         )
-        stats["table_version"] = snap.version if snap else None
-
-        if watermark_store is not None:
-            watermark_store.advance(
-                {
-                    r["source_partition"]: r["high_lsn"]
-                    for r in part_rows
-                    if r["high_lsn"] is not None
-                }
+        if post_transform:
+            deduped = transform(deduped)
+        merge_src = deduped.drop(
+            *[c for c in META_COLS if c in deduped.columns and c not in keep]
+        )
+    try:
+        if patch_delta:
+            snap, merge_stats = table.commit_patches(
+                merge_src, touched_col=patch_touched_col,
+                op_col=op_col, per_bucket=per_bucket,
             )
-        if commit_log is not None:
-            commit_log.commit(source, batch_id, stats)
-
-        stats["latency_ms"] = int((time.time() - t0) * 1000)
-        _record_metrics()
-        return stats
+        else:
+            if skip_unchanged:
+                # Change detection (see LakeTable.changed_only): drop
+                # state-no-op rows BEFORE the merge so all-unchanged
+                # buckets leave the affected set. The stats pass's
+                # per_bucket counts are pre-filter, so the merge must
+                # recount — one extra driver action per batch, paid
+                # only when the caller opts in (full-row-image
+                # upstreams where most updates are no-ops).
+                merge_src = table.changed_only(
+                    merge_src, op_col=op_col,
+                    buckets=set(per_bucket),
+                    broadcast=rows_in <= 200_000,
+                    # the stats pass's histogram arms the jumbo
+                    # bucket-group fallback in read_for_key_frame
+                    per_bucket=per_bucket,
+                    # guarded tables: an absent-key delete must still
+                    # write its tombstone or a later stale upsert
+                    # resurrects the row — never elide it there
+                    drop_absent_deletes=not merge_lww_by,
+                )
+            snap, merge_stats = table.merge(
+                merge_src, op_col=op_col,
+                per_bucket=None if skip_unchanged else per_bucket,
+                lww_by=list(merge_lww_by) if merge_lww_by else None,
+                mode=merge_mode,
+                # cached key-unique fold: the merge's anti-join keys
+                # come from it directly instead of re-executing the
+                # resolution subtree (one fewer bucket scan per batch)
+                source_keys=None if skip_unchanged else fold_cache,
+            )
+            if skip_unchanged:
+                merge_stats = dict(merge_stats)
+                merge_stats["rows_unchanged_skipped"] = (
+                    # pre-dedup valid rows minus post-filter source
+                    # rows over-counts by in-batch duplicates; still
+                    # the honest upper-bound signal without an extra
+                    # pre-filter count action
+                    rows_in - merge_stats.get("source_rows", 0)
+                )
     finally:
-        pass  # no cached state to release (see note above)
+        if fold_cache is not None:
+            fold_cache.unpersist()
+    stats.update(merge_stats)
+    # Post-dedup count observed on the merge-write job — NOT the
+    # pre-dedup per_bucket sum (in-batch duplicates don't count as
+    # applied rows).
+    stats["rows_applied"] = merge_stats.get(
+        "rows_applied", merge_stats.get("source_rows", 0)
+    )
+    stats["table_version"] = snap.version if snap else None
+    return _finish(applied=True)
 
 
 def replay_dead_letters(
@@ -578,15 +617,12 @@ def replay_dead_letters(
         merge_lww_by = [
             c for c in DEFAULT_ORDER if c in tcols and c in df.columns
         ] or None
-    vals = list(validators) if validators is not None else default_validators(op_col)
-    pred = vals[0][1]
-    for _, p in vals[1:]:
-        pred = pred & p
-    # totality under three-valued logic: a NULL verdict (op IS NULL, or a
-    # fix() that nulls a checked column) must stay in the still-failed
-    # split — otherwise the row passes neither filter nor ~filter, and
-    # purge then deletes its only copy
-    pred = F.coalesce(pred, F.lit(False))
+    # NULL-safe: a NULL verdict (op IS NULL, or a fix() that nulls a
+    # checked column) stays in the still-failed split — otherwise purge
+    # would delete the row's only copy
+    pred, err = _fold_validators(
+        list(validators) if validators is not None else default_validators(op_col)
+    )
     df.persist()
     try:
         rows_read = df.count()
@@ -606,13 +642,6 @@ def replay_dead_letters(
         if purge:
             import uuid as _uuid
 
-            err = F.coalesce(
-                *[
-                    F.when(~F.coalesce(p, F.lit(False)), F.lit(name))
-                    for name, p in vals
-                ],
-                F.lit("unknown"),
-            )
             # stage still-failed rows OUTSIDE the batch=* namespace, then
             # rename in BEFORE deleting the recovered batches: a crash in
             # between leaves extra rows that the idempotent MERGE collapses

@@ -12,12 +12,15 @@ table B not, with nothing tying their states together). This module is
 the streaming-native upgrade:
 
 * **One scan, N sinks.** The batch is read once for the fused
-  accounting pass (per-(table, source-partition, target-bucket)
-  conditional aggregation — ONE driver action for the whole
-  heterogeneous batch, extending apply_batch's one-accounting-action
-  rule across tables), and once per destination for its merge write —
-  each destination's scan filter (`table = 'x'`) pushes down to the WAL
-  parquet, so a destination reads only its own rows.
+  accounting pass — ONE driver action for the whole heterogeneous
+  batch — and once per destination for its merge write; each
+  destination's scan filter (`table = 'x'`) pushes down to the WAL
+  parquet, so a destination reads only its own rows. The accounting
+  pass, the validator fold, the dead-letter writer and the checkpoint
+  epilogue are ``cdc.apply``'s shared batch code, the same code
+  ``apply_batch`` runs: the router only adds the table column to the
+  accounting grouping and states its validity and bucket id as
+  per-destination CASE chains.
 * **Atomic cross-table visibility.** The per-table MERGEs stage on a
   :class:`~etl_spark.lake.catalog.CatalogTransaction`'s branch handles;
   ONE catalog link-create flips every destination from batch N-1 state
@@ -40,7 +43,7 @@ the streaming-native upgrade:
   unpublished commits).
 
 Scale shape: routing metadata (key/bucket spec per destination) is
-O(#tables) driver-side JSON header reads; the validity/bucket routing
+O(#tables) driver-side JSON header reads; the key-check/bucket routing
 expressions are literal CASE chains (pure codegen, no join); the only
 per-batch Spark work beyond apply_batch's is one filtered scan per
 destination that actually has rows. Hot destinations keep apply_batch's
@@ -61,10 +64,16 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any, ClassVar
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.cdc.apply import dedup_last_writer_wins
+from etl_spark.cdc.apply import (
+    _account,
+    _checkpoint,
+    _dead_letter,
+    _fold_validators,
+    dedup_last_writer_wins,
+)
 from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.cdc.state import CommitLog, WatermarkStore, filter_by_watermarks
 from etl_spark.lake import LakeTable
@@ -176,77 +185,30 @@ def route_batch(
             catalog.repair(name)
 
     tbl = F.col(table_col)
-    # literal CASE chains over the (small) destination set: validity,
-    # error label, and the DESTINATION-SPECIFIC bucket id — so the one
-    # fused accounting pass yields each destination's per-bucket
-    # histogram under its own bucket spec
-    valid_expr: Column | None = None
-    bucket_expr: Column | None = None
+    # literal CASE chains over the (small) destination set: the key check
+    # and the DESTINATION-SPECIFIC bucket id — so the one fused accounting
+    # pass yields each destination's per-bucket histogram under its own
+    # bucket spec
+    keys_ok = bucket = F  # F.when opens a CASE chain, Column.when extends it
     for name, info in infos.items():
-        p = F.col(op_col).isin("I", "U", "D")
-        for k in info["key"]:
-            p = p & F.col(k).isNotNull()
-        b = bucket_of(info["bucket_by"], info["n_buckets"])
-        if valid_expr is None:
-            valid_expr = F.when(tbl == name, p)
-            bucket_expr = F.when(tbl == name, b)
-        else:
-            valid_expr = valid_expr.when(tbl == name, p)
-            bucket_expr = bucket_expr.when(tbl == name, b)
-    valid_pred = F.coalesce(valid_expr.otherwise(F.lit(False)), F.lit(False))
-    bucket = bucket_expr.otherwise(F.lit(-1)).alias("_bucket")
-
-    lsn = F.col("lsn") if "lsn" in raw.columns else F.lit(None).cast("long")
-    part = (
-        F.col("source_partition")
-        if "source_partition" in raw.columns
-        else F.lit(-1).alias("source_partition")
-    )
-    cells = (
-        raw.groupBy(tbl.alias("_tbl"), part, bucket)
-        .agg(
-            F.count(F.when(valid_pred, 1)).alias("rows_in"),
-            F.count(F.when(~valid_pred, 1)).alias("rows_failed"),
-            F.min(F.when(valid_pred, lsn)).alias("low_lsn"),
-            F.max(F.when(valid_pred, lsn)).alias("high_lsn"),
+        k_ok = F.col(info["key"][0]).isNotNull()
+        for k in info["key"][1:]:
+            k_ok = k_ok & F.col(k).isNotNull()
+        keys_ok = keys_ok.when(tbl == name, k_ok)
+        bucket = bucket.when(
+            tbl == name, bucket_of(info["bucket_by"], info["n_buckets"])
         )
-        .collect()
-    )
-    per_table_buckets: dict[str, dict[int, int]] = {}
-    per_table_parts: dict[str, dict[int, dict]] = {}
-    parts: dict[int, dict] = {}
-    rows_in = rows_failed = 0
-    for c in cells:
-        rows_in += c["rows_in"]
-        rows_failed += c["rows_failed"]
-        if c["rows_in"] and c["_tbl"] in infos:
-            pb = per_table_buckets.setdefault(c["_tbl"], {})
-            pb[c["_bucket"]] = pb.get(c["_bucket"], 0) + c["rows_in"]
-            tp = per_table_parts.setdefault(c["_tbl"], {}).setdefault(
-                c["source_partition"],
-                {"rows_in": 0, "rows_failed": 0, "low_lsn": None, "high_lsn": None},
-            )
-            tp["rows_in"] += c["rows_in"]
-        p = parts.setdefault(
-            c["source_partition"],
-            {"rows_in": 0, "rows_failed": 0, "low_lsn": None, "high_lsn": None},
-        )
-        p["rows_in"] += c["rows_in"]
-        p["rows_failed"] += c["rows_failed"]
-        for k, fn in (("low_lsn", min), ("high_lsn", max)):
-            if c[k] is not None:
-                p[k] = c[k] if p[k] is None else fn(p[k], c[k])
-    # per-destination failed counts for metrics: failures group under the
-    # row's own claimed table (unknown tables land under their raw name,
-    # which is not in infos — they stay in the global count only)
-    for c in cells:
-        if c["rows_failed"] and c["_tbl"] in infos:
-            tp = per_table_parts.setdefault(c["_tbl"], {}).setdefault(
-                c["source_partition"],
-                {"rows_in": 0, "rows_failed": 0, "low_lsn": None, "high_lsn": None},
-            )
-            tp["rows_failed"] += c["rows_failed"]
-
+    valid_pred, err = _fold_validators([
+        ("unknown_table", tbl.isin(*infos)),
+        ("op_unknown", F.col(op_col).isin("I", "U", "D")),
+        ("key_not_null", keys_ok),
+    ])
+    acct = _account(raw, bucket.otherwise(F.lit(-1)), valid_pred, dest=tbl)
+    all_parts = [r for _pb, parts in acct.values() for r in parts]
+    rows_in = sum(r["rows_in"] for r in all_parts)
+    rows_failed = sum(r["rows_failed"] for r in all_parts)
+    # rows naming an unknown table count in the batch totals only
+    routed = {name: acct[name] for name in infos if name in acct}
     stats: dict = {
         "batch_id": batch_id,
         "source": source,
@@ -255,55 +217,29 @@ def route_batch(
         "rows_failed": rows_failed,
         "tables": {},
     }
-
     if rows_failed and dead_letter_dir is not None:
-        is_known = tbl.isin(*infos.keys()) if infos else F.lit(False)
-        err = (
-            F.when(~F.coalesce(is_known, F.lit(False)), F.lit("unknown_table"))
-            .when(
-                ~F.coalesce(F.col(op_col).isin("I", "U", "D"), F.lit(False)),
-                F.lit("op_unknown"),
-            )
-            .otherwise(F.lit("key_not_null"))
-        )
-        (
-            raw.filter(~valid_pred)
-            .withColumn("error", err)
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(dead_letter_dir, f"batch={batch_id}"))
+        _dead_letter(raw, valid_pred, err, dead_letter_dir, batch_id)
+
+    def _finish(applied: bool) -> dict:
+        return _checkpoint(
+            spark, stats, t0, source=source, batch_id=batch_id,
+            commit_log=commit_log, metrics=metrics,
+            # per-destination rows carry no LSN range
+            metric_rows=[
+                {"source": f"{source}:{name}", **r,
+                 "low_lsn": None, "high_lsn": None}
+                for name, (_pb, parts) in routed.items()
+                for r in parts
+            ],
+            watermark_store=watermark_store,
+            applied_parts=all_parts if applied else None,
         )
 
-    def _finish() -> dict:
-        if commit_log is not None:
-            commit_log.commit(source, batch_id, stats)
-        stats["latency_ms"] = int((time.time() - t0) * 1000)
-        stats.setdefault("rows_applied", 0)
-        if metrics is not None:
-            rows = []
-            for name, tparts in per_table_parts.items():
-                for sp, r in tparts.items():
-                    rows.append(
-                        {
-                            "source": f"{source}:{name}",
-                            "batch_id": batch_id,
-                            "source_partition": sp,
-                            "rows_in": r["rows_in"],
-                            "rows_applied": None,
-                            "rows_failed": r["rows_failed"],
-                            "low_lsn": r["low_lsn"],
-                            "high_lsn": r["high_lsn"],
-                            "latency_ms": stats["latency_ms"],
-                        }
-                    )
-            if rows:
-                metrics.record(spark, rows)
-        return stats
-
+    per_table_buckets = {name: pb for name, (pb, _) in routed.items() if pb}
     if not per_table_buckets:
         stats["rows_applied"] = 0
         stats["catalog_version"] = None
-        return _finish()
+        return _finish(applied=False)
 
     keep = set(merge_lww_by or ())
     with catalog.transaction() as txn:
@@ -347,15 +283,7 @@ def route_batch(
         m.get("rows_applied", m.get("source_rows", 0))
         for m in stats["tables"].values()
     )
-    if watermark_store is not None:
-        watermark_store.advance(
-            {
-                sp: r["high_lsn"]
-                for sp, r in parts.items()
-                if r["high_lsn"] is not None
-            }
-        )
-    return _finish()
+    return _finish(applied=True)
 
 
 @dataclass

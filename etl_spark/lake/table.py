@@ -1111,7 +1111,13 @@ class LakeTable:
         cols = head.bucket_by
         tuples = [v if isinstance(v, tuple) else (v,) for v in values]
         schema = T.StructType([head.schema[c] for c in cols])
-        vals_df = self.spark.createDataFrame(tuples, schema)
+        import pandas as pd
+
+        # a pandas-built frame plans as a LocalRelation (a list-built one
+        # as an RDD scan), which is what lets the histogram run no job
+        vals_df = self.spark.createDataFrame(
+            pd.DataFrame(tuples, columns=cols, dtype=object), schema
+        )
         buckets = set(self.bucket_histogram(vals_df, version))
         out = self._read_buckets(buckets, version)
         pred = None
@@ -2333,14 +2339,13 @@ class LakeTable:
         new = self._read_files(snap_to, to_entries, buckets=to_scope)
         key = snap_to.key
         payload = [f.name for f in snap_to.schema.fields if f.name not in key]
-        shared = payload
         o = old.select(
-            *key, *[F.col(c).alias(f"__o_{c}") for c in shared]
+            *key, *[F.col(c).alias(f"__o_{c}") for c in payload]
         ).withColumn("__in_old", F.lit(True))
         n = new.select(*key, *payload).withColumn("__in_new", F.lit(True))
         j = o.join(n, on=key, how="full_outer")
         same = F.lit(True)
-        for c in shared:
+        for c in payload:
             same = same & (
                 F.col(c).eqNullSafe(F.col(f"__o_{c}"))
             )
@@ -2358,8 +2363,6 @@ class LakeTable:
             F.when(F.col("__in_new").isNull(), F.col(f"__o_{c}"))
             .otherwise(F.col(c))
             .alias(c)
-            if c in shared
-            else F.col(c)
             for c in payload
         ]
         base_out = (
@@ -2381,10 +2384,7 @@ class LakeTable:
         )
         pre_struct = F.struct(
             *[F.col(k).alias(k) for k in key],
-            *[
-                (F.col(f"__o_{c}") if c in shared else F.col(c)).alias(c)
-                for c in payload
-            ],
+            *[F.col(f"__o_{c}").alias(c) for c in payload],
             F.lit("update_preimage").alias("_change_type"),
         )
         arr = F.when(

@@ -49,7 +49,7 @@ from typing import ClassVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from etl_spark.cdc.apply import apply_batch
+from etl_spark.cdc.apply import _checkpoint, apply_batch
 from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.cdc.state import CommitLog, WatermarkStore
 from etl_spark.lake import LakeTable
@@ -403,38 +403,32 @@ class CdcStream(WalTail):
             self.exporter = ChangeFeedExporter(self.table, self.replicate_to)
 
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        stats = retry_with_backoff(
-            lambda: apply_batch(
-                self.spark,
-                batch_df,
-                self.table,
-                batch_id=batch_id,
-                source=self.source_name,
-                transform=self.transform,
-                transform_stage=self.transform_stage,
-                commit_log=self.commit_log,
-                watermark_store=self.watermarks,
-                metrics=self.metrics,
-                dead_letter_dir=self.dead_letter_dir,
-                salted_dedup=self.salted_dedup,
-                merge_lww_by=self.merge_lww_by,
-                merge_mode=self.merge_mode,
-                patch_touched_col=self.patch_touched_col,
-                skip_unchanged=self.skip_unchanged,
-            ),
-        )
-        for i, extra in enumerate(self.extra_tables):
+        # the primary table, then each extra destination under its own
+        # commit-log stream and watermark store; metrics and dead letters
+        # are recorded for the primary only
+        sinks = [(
+            self.table, self.source_name, self.watermarks, self.metrics,
+            self.dead_letter_dir,
+        )] + [
+            (t, f"{self.source_name}:dest{i}", wm, None, None)
+            for i, (t, wm) in enumerate(
+                zip(self.extra_tables, self.extra_watermarks), 1
+            )
+        ]
+        per_sink = [
             retry_with_backoff(
-                lambda t=extra, i=i: apply_batch(
+                lambda: apply_batch(
                     self.spark,
                     batch_df,
-                    t,
+                    table,
                     batch_id=batch_id,
-                    source=f"{self.source_name}:dest{i + 1}",
+                    source=source,
                     transform=self.transform,
                     transform_stage=self.transform_stage,
                     commit_log=self.commit_log,
-                    watermark_store=self.extra_watermarks[i],
+                    watermark_store=wm,
+                    metrics=metrics,
+                    dead_letter_dir=dead_letter_dir,
                     salted_dedup=self.salted_dedup,
                     merge_lww_by=self.merge_lww_by,
                     merge_mode=self.merge_mode,
@@ -442,6 +436,9 @@ class CdcStream(WalTail):
                     skip_unchanged=self.skip_unchanged,
                 ),
             )
+            for table, source, wm, metrics, dead_letter_dir in sinks
+        ]
+        stats = per_sink[0]
         if self.dedup_index:
             stats["near_dup_pairs"] = retry_with_backoff(
                 lambda: self._dedup_ingest(batch_df, batch_id)
@@ -580,11 +577,9 @@ class CdcStream(WalTail):
         from pyspark.sql import functions as F
 
         from etl_spark.cdc.apply import (
-            DEFAULT_ORDER,
-            META_COLS,
+            _fold_validators,
+            _select_validators,
             dedup_last_writer_wins,
-            default_patch_validators,
-            default_validators,
         )
         from etl_spark.operators.incremental_dedup import MinHashIndex
 
@@ -595,22 +590,10 @@ class CdcStream(WalTail):
         raw = batch_df
         if self.transform is not None and self.transform_stage == "pre":
             raw = self.transform(raw)
-        if self.patch_touched_col is not None:
-            payload_cols = [
-                c for c in raw.columns
-                if c not in key and c not in DEFAULT_ORDER
-                and c not in META_COLS
-                and c not in ("op", self.patch_touched_col)
-            ]
-            vals = default_patch_validators(
-                "op", self.patch_touched_col, payload_cols
-            )
-        else:
-            vals = default_validators("op")
-        pred = vals[0][1]
-        for _, p in vals[1:]:
-            pred = pred & p
-        rows = raw.filter(F.coalesce(pred, F.lit(False))).filter(
+        valid_pred, _err = _fold_validators(_select_validators(
+            None, raw.columns, key, "op", self.patch_touched_col
+        ))
+        rows = raw.filter(valid_pred).filter(
             (F.col("op") != "D") & F.col("text").isNotNull()
         )
         rows = dedup_last_writer_wins(rows, key=key, salted=self.salted_dedup)
@@ -663,7 +646,7 @@ class CdcStream(WalTail):
             # leave the index. Gated by the same commit marker, so a
             # crash-replay re-prunes already-absent keys: a no-op merge.
             final = dedup_last_writer_wins(
-                raw.filter(F.coalesce(pred, F.lit(False))),
+                raw.filter(valid_pred),
                 key=key, salted=self.salted_dedup,
             )
             del_ids = final.filter(F.col("op") == "D").select(
@@ -797,17 +780,14 @@ class Scd2Stream(WalTail):
             ),
         )
         stats = {"batch_id": batch_id, "skipped": False, **stats}
-        self.commit_log.commit(self.source_name, batch_id, stats)
-        stats["latency_ms"] = int((time.time() - t0) * 1000)
-        self.metrics.record(
-            self.spark,
-            [{
+        self._record(_checkpoint(
+            self.spark, stats, t0, source=self.source_name,
+            batch_id=batch_id, commit_log=self.commit_log,
+            metrics=self.metrics,
+            metric_rows=[{
                 "source": self.source_name,
-                "batch_id": batch_id,
                 "rows_in": stats["source_rows"],
                 "rows_applied": stats["events_applied"],
                 "rows_failed": stats["late_rows"],
-                "latency_ms": stats["latency_ms"],
             }],
-        )
-        self._record(stats)
+        ))

@@ -126,3 +126,25 @@ def test_wide_table_read_builds_without_a_listing_job(spark, tmp_path):
     assert len(t.snapshot().data_files) >= 33
     _df, n = _jobs(spark, t.read)
     assert n == 0
+
+
+def test_composite_read_for_keys_runs_at_most_one_job(spark, tmp_path):
+    """The literal key values form a driver-resident frame, so the bucket
+    set costs no job and the lookup is one bucket-pruned scan."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, key=KEY, n_buckets=8,
+        bucket_by=KEY,
+    )
+    t.append(
+        spark.createDataFrame(
+            [(f"c{i}", j, f"t{i}.{j}") for i in range(40) for j in range(2)],
+            SCHEMA,
+        )
+    )
+    rows, n = _jobs(
+        spark, lambda: t.read_for_keys([("c3", 1), ("c17", 0)]).collect()
+    )
+    assert sorted(tuple(r) for r in rows) == [
+        ("c17", 0, "t17.0"), ("c3", 1, "t3.1"),
+    ]
+    assert n <= 1

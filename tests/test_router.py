@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_spark.cdc import RoutedCdcStream, route_batch
+from etl_spark.cdc.metrics import MetricsTable
 from etl_spark.cdc.state import CommitLog, WatermarkStore
 from etl_spark.lake import Catalog, LakeTable
 
@@ -157,6 +158,62 @@ def test_unknown_table_and_invalid_rows_dead_letter(spark, tmp_path):
         ("users", "key_not_null"),
         ("users", "op_unknown"),
     }
+
+
+def test_metric_rows_per_destination_and_partition(spark, tmp_path):
+    cat, turns, users = mk_catalog(spark, tmp_path)
+    metrics = MetricsTable(str(tmp_path / "metrics"))
+    wm = WatermarkStore(str(tmp_path / "wm"))
+    log = CommitLog(str(tmp_path / "commits"))
+    b0 = spark.createDataFrame(
+        [
+            ev("turns", "I", 1, part=0, conv="c1", turn=0, role="u", text="a"),
+            ev("turns", "I", 2, part=1, conv="c2", turn=0, role="u", text="b"),
+            ev("turns", "I", 3, part=0, conv=None, turn=1),   # NULL key
+            ev("users", "I", 4, part=1, uid=7, name="ada"),
+            ev("users", "X", 5, part=1, uid=9, name="badop"),  # unknown op
+            ev("orders", "I", 6, part=0, conv="c9", turn=9),  # unregistered
+        ],
+        WAL_SCHEMA,
+    )
+    s0 = route_batch(
+        spark, b0, cat, batch_id=0, commit_log=log, watermark_store=wm,
+        metrics=metrics, dead_letter_dir=str(tmp_path / "dl"),
+    )
+    assert set(s0) == {
+        "batch_id", "source", "skipped", "rows_in", "rows_failed", "tables",
+        "catalog_version", "rows_applied", "latency_ms",
+    }
+    assert (s0["rows_in"], s0["rows_failed"], s0["rows_applied"]) == (3, 3, 3)
+    assert wm.get_all() == {0: 1, 1: 4}
+    # an all-failed batch still records its failures per destination
+    b1 = spark.createDataFrame(
+        [ev("users", "X", 7, part=0, uid=9, name="badop")], WAL_SCHEMA
+    )
+    s1 = route_batch(
+        spark, b1, cat, batch_id=1, commit_log=log, watermark_store=wm,
+        metrics=metrics,
+    )
+    assert set(s1) == set(s0)
+    assert (s1["rows_in"], s1["rows_failed"], s1["catalog_version"]) == (
+        0, 1, None,
+    )
+    rows = metrics.to_df(spark).collect()
+    assert all(r.latency_ms is not None and r.latency_ms >= 0 for r in rows)
+    got = {
+        (r.source, r.batch_id, r.source_partition, r.rows_in, r.rows_applied,
+         r.rows_failed, r.low_lsn, r.high_lsn)
+        for r in rows
+    }
+    # unknown destinations count in the batch totals only; per-destination
+    # rows carry no LSN range
+    assert got == {
+        ("wal:turns", 0, 0, 1, None, 1, None, None),
+        ("wal:turns", 0, 1, 1, None, 0, None, None),
+        ("wal:users", 0, 1, 1, None, 1, None, None),
+        ("wal:users", 1, 0, 0, None, 1, None, None),
+    }
+    assert len(rows) == len(got)
 
 
 def test_schema_isolation_and_opt_in_evolution(spark, tmp_path):
